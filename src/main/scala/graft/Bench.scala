@@ -147,38 +147,45 @@ object Bench {
     // (OPTIMIZATION_r17.md). Settled baseline on this VM: see README.
     val io = {
       val t0 = System.nanoTime()
+      // a failed probe leaves no open descriptor and no 16 MB sentinel
+      // file behind; only non-fatal errors are swallowed
       try {
         val dir = graft.util.LocalTmp.sparkLocalDir("graft-spark")
         val f = new java.io.File(dir, "bench-io-sentinel.bin")
         val buf = new Array[Byte](1 << 20)
         java.util.Arrays.fill(buf, 0x5a.toByte)
-        val out = new java.io.FileOutputStream(f)
-        var i = 0
-        while (i < 16) { out.write(buf); i += 1 }
-        out.close()
         var sink = 0L
-        var r = 0
-        while (r < 4) {
-          val in = new java.io.FileInputStream(f)
-          var n = in.read(buf)
-          while (n > 0) { sink += buf(0) + n; n = in.read(buf) }
-          in.close(); r += 1
-        }
-        f.delete()
+        try {
+          val out = new java.io.FileOutputStream(f)
+          try {
+            var i = 0
+            while (i < 16) { out.write(buf); i += 1 }
+          } finally out.close()
+          var r = 0
+          while (r < 4) {
+            val in = new java.io.FileInputStream(f)
+            try {
+              var n = in.read(buf)
+              while (n > 0) { sink += buf(0) + n; n = in.read(buf) }
+            } finally in.close()
+            r += 1
+          }
+        } finally { f.delete(); () }
         val src = new java.io.File(sfDir, "lineitem.parquet")
         if (src.isFile) {
           val raf = new java.io.RandomAccessFile(src, "r")
-          val len = raf.length()
-          val slice = new Array[Byte](math.min(len, 256L * 1024L).toInt)
-          var k = 0
-          while (k < 32) {
-            raf.seek(math.max(0L, len - slice.length))
-            raf.readFully(slice); sink += slice(0); k += 1
-          }
-          raf.close()
+          try {
+            val len = raf.length()
+            val slice = new Array[Byte](math.min(len, 256L * 1024L).toInt)
+            var k = 0
+            while (k < 32) {
+              raf.seek(math.max(0L, len - slice.length))
+              raf.readFully(slice); sink += slice(0); k += 1
+            }
+          } finally raf.close()
         }
         if (sink == 42L) System.err.println("io sentinel collision")
-      } catch { case _: Throwable => }
+      } catch { case scala.util.control.NonFatal(_) => }
       (System.nanoTime() - t0) / 1e9
     }
     System.err.println(

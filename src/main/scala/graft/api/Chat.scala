@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.functions._
 
-import graft.graph.{GraphQueries, PropertyGraph}
+import graft.graph.{GraphQueries, GraphView}
 
 /** F11 — the NL→graph-query chat surface (`/root/reference/api/llm.py`).
   *
@@ -45,16 +45,17 @@ object Ontology {
   }
 }
 
-/** Pluggable model hook — `ask` mirrors `api/llm.py:260-267`. */
+/** Pluggable model hook — `ask` mirrors `api/llm.py:260-267`. `g` is the
+  * repo as the request sees it (its serving index or its snapshot). */
 trait ChatClient {
-  def ask(repo: String, question: String, g: PropertyGraph): String
+  def ask(repo: String, question: String, g: GraphView): String
 }
 
 /** Test double: fixed responses keyed by question (records calls). */
 final class CannedChatClient(answers: Map[String, String],
     default: String = "I don't know.") extends ChatClient {
   val asked = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  def ask(repo: String, question: String, g: PropertyGraph): String = {
+  def ask(repo: String, question: String, g: GraphView): String = {
     asked += ((repo, question))
     answers.getOrElse(question, default)
   }
@@ -64,19 +65,16 @@ final class CannedChatClient(answers: Map[String, String],
   * of the reference's Cypher generation target: constrained to queries the
   * engine executes natively, so a model answer can never inject free-form
   * query text. Shared by [[RuleChatClient]] (regex → intent) and
-  * [[HttpChatClient]] (model → intent JSON). */
+  * [[HttpChatClient]] (model → intent JSON). Each intent reads the repo's
+  * serving index when it has one, else runs its DataFrame query. */
 object ChatIntents {
-  def execute(op: String, arg: String, g: PropertyGraph): String = op match {
+  def execute(op: String, arg: String, g: GraphView): String = op match {
     case "who_calls" =>
-      val callers = GraphQueries.functionCalledBy(g, arg).collect()
-        .flatMap(r => Option(r.getAs[scala.collection.Seq[String]]("callers")))
-        .flatten.distinct.sorted
+      val callers = callNeighbours(g, arg, incoming = true)
       if (callers.isEmpty) s"No callers of $arg found."
       else s"$arg is called by: ${callers.mkString(", ")}"
     case "calls_of" =>
-      val callees = GraphQueries.functionCalls(g, arg).collect()
-        .flatMap(r => Option(r.getAs[scala.collection.Seq[String]]("callees")))
-        .flatten.distinct.sorted
+      val callees = callNeighbours(g, arg, incoming = false)
       if (callees.isEmpty) s"$arg calls nothing."
       else s"$arg calls: ${callees.mkString(", ")}"
     case "list_label" =>
@@ -84,14 +82,33 @@ object ChatIntents {
         case "Classe" => "Class"
         case l => l
       }
-      val names = g.nodes
-        .filter(array_contains(col("labels"), label))
-        .select(col("name")).orderBy(col("name")).limit(25)
-        .collect().map(_.getString(0))
+      val names = g.index.fold(
+        g.graph.nodes
+          .filter(array_contains(col("labels"), label))
+          .select(col("name")).orderBy(col("name")).limit(25)
+          .collect().map(_.getString(0)).toSeq
+      )(_.namesWithLabel(label, 25))
       if (names.isEmpty) s"No $label entities found."
       else s"$label entities: ${names.mkString(", ")}"
     case _ =>
       "I can answer questions about this code graph.\n" + Ontology.describe
+  }
+
+  /** Distinct, sorted names of the callers (`incoming`) or callees of the
+    * functions named `name`. */
+  private def callNeighbours(g: GraphView, name: String,
+      incoming: Boolean): Seq[String] = {
+    val names = g.index match {
+      case Some(ix) => ix.callNeighbourNames(name, incoming)
+      case None =>
+        val (df, column) =
+          if (incoming) (GraphQueries.functionCalledBy(g.graph, name), "callers")
+          else (GraphQueries.functionCalls(g.graph, name), "callees")
+        df.collect().toSeq
+          .flatMap(r => Option(r.getAs[scala.collection.Seq[String]](column)))
+          .flatten
+    }
+    names.distinct.sorted
   }
 }
 
@@ -102,7 +119,7 @@ object RuleChatClient extends ChatClient {
   private val WhatCalls = """(?i).*what does (\w+) call.*""".r
   private val ListLabel = """(?i).*(?:list|how many) (\w+?)(?:es|s)?\b.*""".r
 
-  def ask(repo: String, question: String, g: PropertyGraph): String =
+  def ask(repo: String, question: String, g: GraphView): String =
     question match {
       case WhoCalls(name) => ChatIntents.execute("who_calls", name, g)
       case WhatCalls(name) => ChatIntents.execute("calls_of", name, g)
@@ -156,7 +173,7 @@ final class HttpChatClient(baseUrl: String, model: String,
       .path("choices").path(0).path("message").path("content").asText("")
   }
 
-  def ask(repo: String, question: String, g: PropertyGraph): String = {
+  def ask(repo: String, question: String, g: GraphView): String = {
     val intentSystem =
       "You translate questions about the code graph of repository '" +
         repo + "' into exactly one intent.\n" + Ontology.describe +

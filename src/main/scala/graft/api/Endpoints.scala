@@ -95,6 +95,20 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
 
   private def loadGraph(repo: String): PropertyGraph = store.load(repo)
 
+  /** {nodes, edges} under `key`: the shared tail of `graph_entities` and
+    * `get_neighbors`, whichever path produced the rows. */
+  private def subGraphResponse(key: String, nodeRows: Seq[Row],
+      edgeTriples: Seq[(String, Long, Long)]): ApiResponse = {
+    val nodes = mapper.createArrayNode()
+    nodeRows.foreach(row => nodes.add(encodeNode(row)))
+    val edges = mapper.createArrayNode()
+    edgeTriples.foreach { case (t, s, d) => edges.add(encodeEdgeLite(t, s, d)) }
+    val sub = mapper.createObjectNode()
+    sub.set[JsonNode]("nodes", nodes)
+    sub.set[JsonNode]("edges", edges)
+    resp(200, "status" -> "success", key -> sub)
+  }
+
   // ---- endpoints -----------------------------------------------------
 
   /** GET /graph_entities (`index.py:53-94`): sub-graph of up to 500
@@ -104,24 +118,21 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case None | Some("") => err("Missing 'repo' parameter")
       case Some(r) if !store.exists(r) => missingProject(r)
       case Some(r) =>
-        val g = loadGraph(r)
-        val sub = GraphQueries.getSubGraph(g, 500).collect()
-        val ids = (sub.map(_.getAs[Long]("src_id")) ++
-          sub.filter(!_.isNullAt(4)).map(_.getAs[Long]("dst_id"))).distinct
-        val nodeRows =
-          if (ids.isEmpty) Array.empty[Row]
-          else g.nodes.filter(col("id").isin(ids.toIndexedSeq: _*)).collect()
-        val nodes = mapper.createArrayNode()
-        nodeRows.foreach(row => nodes.add(encodeNode(row)))
-        val edges = mapper.createArrayNode()
-        sub.filter(row => !row.isNullAt(row.fieldIndex("type"))).foreach { row =>
-          edges.add(encodeEdgeLite(row.getAs[String]("type"),
-            row.getAs[Long]("src_id"), row.getAs[Long]("dst_id")))
+        val (nodeRows, edges) = store.servingIndex(r) match {
+          case Some(ix) => ix.subGraph(500)
+          case None =>
+            val g = loadGraph(r)
+            val sub = GraphQueries.getSubGraph(g, 500).collect()
+            val ids = (sub.map(_.getAs[Long]("src_id")) ++
+              sub.filter(!_.isNullAt(4)).map(_.getAs[Long]("dst_id"))).distinct
+            val nodeRows =
+              if (ids.isEmpty) Array.empty[Row]
+              else g.nodes.filter(col("id").isin(ids.toIndexedSeq: _*)).collect()
+            (nodeRows.toSeq, sub.toSeq.filter(row => !row.isNullAt(row.fieldIndex("type")))
+              .map(row => (row.getAs[String]("type"), row.getAs[Long]("src_id"),
+                row.getAs[Long]("dst_id"))))
         }
-        val ent = mapper.createObjectNode()
-        ent.set[JsonNode]("nodes", nodes)
-        ent.set[JsonNode]("edges", edges)
-        resp(200, "status" -> "success", "entities" -> ent)
+        subGraphResponse("entities", nodeRows, edges)
     }
   }
 
@@ -141,24 +152,20 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
               case i: Int => i.toLong
               case l: Long => l
             }
-            val g = loadGraph(r)
-            val out = GraphQueries.getNeighbors(g, longIds).collect()
-            val destIds = out.map(_.getAs[Long]("id")).distinct
-            val nodeRows =
-              if (destIds.isEmpty) Array.empty[Row]
-              else g.nodes.filter(col("id").isin(destIds.toIndexedSeq: _*))
-                .collect()
-            val nodes = mapper.createArrayNode()
-            nodeRows.foreach(row => nodes.add(encodeNode(row)))
-            val edges = mapper.createArrayNode()
-            out.foreach { row =>
-              edges.add(encodeEdgeLite(row.getAs[String]("type"),
-                row.getAs[Long]("src"), row.getAs[Long]("id")))
+            val (nodeRows, edges) = store.servingIndex(r) match {
+              case Some(ix) => ix.neighbors(longIds)
+              case None =>
+                val g = loadGraph(r)
+                val out = GraphQueries.getNeighbors(g, longIds).collect()
+                val destIds = out.map(_.getAs[Long]("id")).distinct
+                val nodeRows =
+                  if (destIds.isEmpty) Array.empty[Row]
+                  else g.nodes.filter(col("id").isin(destIds.toIndexedSeq: _*))
+                    .collect()
+                (nodeRows.toSeq, out.toSeq.map(row => (row.getAs[String]("type"),
+                  row.getAs[Long]("src"), row.getAs[Long]("id"))))
             }
-            val nb = mapper.createObjectNode()
-            nb.set[JsonNode]("nodes", nodes)
-            nb.set[JsonNode]("edges", edges)
-            resp(200, "status" -> "success", "neighbors" -> nb)
+            subGraphResponse("neighbors", nodeRows, edges)
         }
     }
   }
@@ -171,7 +178,9 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case (Some(r), _) if !store.exists(r) => missingProject(r)
       case (Some(r), Some(p)) =>
         val completions = mapper.createArrayNode()
-        GraphQueries.autoComplete(loadGraph(r), p).collect().foreach { row =>
+        store.servingIndex(r).fold(
+          GraphQueries.autoComplete(loadGraph(r), p).collect().toSeq
+        )(_.autoComplete(p)).foreach { row =>
           val n = mapper.createObjectNode()
           n.put("id", row.getAs[Long]("id"))
           val props = n.putObject("properties")
@@ -189,16 +198,20 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     resp(200, "status" -> "success", "repositories" -> repos)
   }
 
-  /** POST /repo_info (`index.py:205-248`): stats |= info hash. */
+  /** POST /repo_info (`index.py:205-248`): stats |= info hash (without
+    * the engine's internal keys). */
   def repoInfo(repo: Option[String]): ApiResponse = repo match {
     case None => err("Missing mandatory parameter \"repo\"")
     case Some(r) if !store.exists(r) => err(s"Missing repository \"$r\"")
     case Some(r) =>
       val info = mapper.createObjectNode()
-      GraphQueries.stats(loadGraph(r)).collect().foreach { row =>
-        info.put(row.getAs[String]("entity") + "_count", row.getAs[Long]("n"))
+      val counts = store.servingIndex(r) match {
+        case Some(ix) => Seq("nodes" -> ix.nodeCount, "edges" -> ix.edgeCount)
+        case None => GraphQueries.stats(loadGraph(r)).collect().toSeq
+          .map(row => row.getAs[String]("entity") -> row.getAs[Long]("n"))
       }
-      store.getInfo(r).foreach { case (k, v) => info.put(k, v) }
+      counts.foreach { case (entity, n) => info.put(entity + "_count", n) }
+      store.publicInfo(r).foreach { case (k, v) => info.put(k, v) }
       resp(200, "status" -> "success", "info" -> info)
   }
 
@@ -224,32 +237,37 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     }
     val r = repo.get
     if (!store.exists(r)) return missingProject(r)
-    val g = loadGraph(r)
-    val nodeById = g.nodes
-    val pathRows = Paths.findPaths(g, srcId, destId).collect()
-    // one nodes fetch + one edges fetch for ALL paths, then assemble
-    val allIds = pathRows.flatMap(_.getAs[scala.collection.Seq[Long]]("path")).distinct
-    val nodeMap =
-      if (allIds.isEmpty) Map.empty[Long, Row]
-      else nodeById.filter(col("id").isin(allIds.toIndexedSeq: _*)).collect()
-        .map(row => row.getAs[Long]("id") -> row).toMap
-    val callEdges =
-      if (allIds.isEmpty) Map.empty[(Long, Long), Row]
-      else g.edges.filter(col("type") === "CALLS" &&
-          col("src").isin(allIds.toIndexedSeq: _*))
-        .collect().map(row =>
-          (row.getAs[Long]("src"), row.getAs[Long]("dst")) -> row).toMap
+    val (pathIds, node, callEdge) = store.servingIndex(r) match {
+      case Some(ix) =>
+        (ix.findPaths(srcId, destId), ix.node _,
+          (a: Long, b: Long) => ix.lastEdge(a, b))
+      case None =>
+        val g = loadGraph(r)
+        val pathIds = Paths.findPaths(g, srcId, destId).collect().toSeq
+          .map(_.getAs[scala.collection.Seq[Long]]("path").toSeq)
+        // one nodes fetch + one edges fetch for ALL paths, then assemble
+        val allIds = pathIds.flatten.distinct
+        val nodeMap =
+          if (allIds.isEmpty) Map.empty[Long, Row]
+          else g.nodes.filter(col("id").isin(allIds: _*)).collect()
+            .map(row => row.getAs[Long]("id") -> row).toMap
+        val callEdges =
+          if (allIds.isEmpty) Map.empty[(Long, Long), Row]
+          else g.edges.filter(col("type") === "CALLS" && col("src").isin(allIds: _*))
+            .collect().map(row =>
+              (row.getAs[Long]("src"), row.getAs[Long]("dst")) -> row).toMap
+        (pathIds, nodeMap.get _, (a: Long, b: Long) => callEdges.get((a, b)))
+    }
     val paths = mapper.createArrayNode()
-    pathRows.foreach { row =>
-      val ids = row.getAs[scala.collection.Seq[Long]]("path")
+    pathIds.foreach { ids =>
       val p = mapper.createArrayNode()
       ids.sliding(2).foreach {
-        case scala.collection.Seq(a, b) =>
-          nodeMap.get(a).foreach(n => p.add(encodeNode(n)))
-          callEdges.get((a, b)).foreach(e => p.add(encodeEdge(e)))
+        case Seq(a, b) =>
+          node(a).foreach(n => p.add(encodeNode(n)))
+          callEdge(a, b).foreach(e => p.add(encodeEdge(e)))
         case _ => ()
       }
-      ids.lastOption.flatMap(nodeMap.get).foreach(n => p.add(encodeNode(n)))
+      ids.lastOption.flatMap(node).foreach(n => p.add(encodeNode(n)))
       paths.add(p)
     }
     resp(200, "status" -> "success", "paths" -> paths)
@@ -262,7 +280,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case (_, None) => err("Missing mandatory parameter \"msg\"")
       case (Some(r), Some(m)) =>
         resp(200, "status" -> "success",
-          "response" -> chat.ask(r, m, loadGraph(r)))
+          "response" -> chat.ask(r, m, store.view(r)))
     }
 
   /** POST /analyze_folder (`index.py:330-381`): graph name = folder name. */

@@ -22,6 +22,9 @@ final class CodeGraph(val spark: SparkSession, val name: String,
   private var current: PropertyGraph =
     store.filter(_.exists(name)).map(_.load(name)).getOrElse(GraphSchema.empty(spark))
   private var opsSinceCheckpoint = 0
+  // frames cached since the last checkpointNow (mutations' and the
+  // ingest's): the current snapshot's lineage reads them until it is pinned
+  private val cachedSincePin = ArrayBuffer.empty[DataFrame]
 
   // ---- backlog (C8) --------------------------------------------------
   private var backlogEnabled = false
@@ -39,6 +42,7 @@ final class CodeGraph(val spark: SparkSession, val name: String,
   def mutate(op: GraphOp): MutationResult = {
     val res = Mutations.applyOp(current, op)
     current = res.graph
+    cachedSincePin ++= res.cached
     opsSinceCheckpoint += 1
     if (opsSinceCheckpoint >= 4) { // bound lineage growth
       current = current.checkpointed()
@@ -119,14 +123,23 @@ final class CodeGraph(val spark: SparkSession, val name: String,
   }
 
   /** Force-materialize the current snapshot (cuts lineage; call after a
-    * bulk build phase so later actions don't replay ID assignment). */
+    * bulk build phase so later actions don't replay ID assignment), then
+    * release the frames cached since the last call: nothing of the pinned
+    * snapshot reads them any more. */
   def checkpointNow(): Unit = {
     current = current.checkpointed()
     opsSinceCheckpoint = 0
+    cachedSincePin.foreach(_.unpersist(blocking = false))
+    cachedSincePin.clear()
   }
+
+  /** Frames a build phase cached for its own batches, released with the
+    * mutations' at the next [[checkpointNow]]. */
+  def releaseAtCheckpoint(frames: DataFrame*): Unit = cachedSincePin ++= frames
 
   private def track(res: MutationResult): MutationResult = {
     current = res.graph
+    cachedSincePin ++= res.cached
     opsSinceCheckpoint += 1
     // every-op checkpointing measured 6x SLOWER on bulk builds (the eager
     // materialization defeats plan reuse across the mutation's own joins);

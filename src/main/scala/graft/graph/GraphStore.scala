@@ -21,6 +21,12 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * Scale: per-repo directories shard naturally; at 100 TB a repo's
   * `nodes`/`edges` are partitioned parquet dirs and the same swap protocol
   * applies per partition.
+  *
+  * Serving: a repo whose tables fit [[servingLimit]] is read from a resident
+  * [[ServingIndex]], built on the first read after a write and dropped by
+  * every write through this store ([[save]], [[delete]], [[cloneGraph]]
+  * onto it, [[setInfo]]); writes made through another `GraphStore` on the
+  * same warehouse are not seen (the single-writer contract).
   */
 final class GraphStore(spark: SparkSession, val warehouse: String) {
 
@@ -57,7 +63,42 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     else PropertyGraph(
       spark.read.schema(GraphSchema.nodeSchema).parquet(nodesDir(name).toString),
       spark.read.schema(GraphSchema.edgeSchema).parquet(edgesDir(name).toString),
-      nextIdHint = getInfo(name).get("next_id").map(_.toLong))
+      nextIdHint = getInfo(name).get(GraphStore.NextIdKey).map(_.toLong))
+
+  // ---- resident serving index --------------------------------------------
+
+  /** Row bound of the serving index, per table: [[Paths.EdgeBroadcastLimit]],
+    * the same bound under which `find_paths` broadcasts the edge set. A
+    * repo over it keeps the DataFrame reads. Package-private so a spec can
+    * send reads down the DataFrame path (-1 admits no repo). */
+  @volatile private[graft] var servingLimit: Long = Paths.EdgeBroadcastLimit
+
+  // per repo: the index of its current version, or None when over the bound
+  private val served = scala.collection.mutable.HashMap.empty[String, Option[ServingIndex]]
+  private var writes = 0L
+
+  /** The resident index of `name`'s current version, built on the first call
+    * after a write; None when the repo does not exist or is over
+    * [[servingLimit]] (that result is kept until the next write too). */
+  def servingIndex(name: String): Option[ServingIndex] = {
+    val (known, seen) = synchronized((served.get(name), writes))
+    known.getOrElse {
+      if (!exists(name)) None
+      else {
+        val built = ServingIndex.build(load(name), servingLimit)
+        // a write that finished during the build may have made it stale
+        synchronized { if (writes == seen) served(name) = built }
+        built
+      }
+    }
+  }
+
+  /** `name` as a read request sees it: the serving index when it has one,
+    * else the stored snapshot, loaded on first use. */
+  def view(name: String): GraphView = new GraphView(servingIndex(name), load(name))
+
+  private def written[T](name: String)(write: => T): T =
+    try write finally synchronized { served -= name; writes += 1 }
 
   /** Persist a snapshot with stage-then-swap (atomic per table).
     *
@@ -69,7 +110,7 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     * per type here; at warehouse scale it becomes
     * `repartition(N, type, src)` for N files per type with disjoint src
     * ranges, same layout contract. */
-  def save(name: String, g: PropertyGraph): Unit = {
+  def save(name: String, g: PropertyGraph): Unit = written(name) {
     import org.apache.spark.sql.functions.col
     val stage = new Path(repoDir(name), s".stage-${java.util.UUID.randomUUID()}")
     val stagedNodes = new Path(stage, "nodes")
@@ -115,11 +156,11 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       .filter(_.getPath.getName.startsWith(".stage-"))
       .foreach(s => fs.delete(s.getPath, true))
     // persist the ID high-water mark (see load) — monotone across deletes
-    g.nextIdHint.foreach(h => setInfo(name, Map("next_id" -> h.toString)))
+    g.nextIdHint.foreach(h => setInfo(name, Map(GraphStore.NextIdKey -> h.toString)))
   }
 
   /** C6: copy a whole graph under a new name (`api/graph.py:64-83`). */
-  def cloneGraph(from: String, to: String): Unit = {
+  def cloneGraph(from: String, to: String): Unit = written(to) {
     require(exists(from), s"no such graph: $from")
     fs.delete(repoDir(to), true)
     FileUtil.copy(fs, repoDir(from), fs, repoDir(to), false,
@@ -127,10 +168,10 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   }
 
   /** C7: drop a graph (`api/graph.py:86-90`). */
-  def delete(name: String): Unit = fs.delete(repoDir(name), true)
+  def delete(name: String): Unit = written(name) { fs.delete(repoDir(name), true); () }
 
   /** `{name}_info` hash: `commit` / `repo_url` (`api/info.py:32-88`). */
-  def setInfo(name: String, kv: Map[String, String]): Unit = {
+  def setInfo(name: String, kv: Map[String, String]): Unit = written(name) {
     val merged = getInfo(name) ++ kv
     val json = OpLog.mapper.writeValueAsString(merged)
     fs.mkdirs(repoDir(name))
@@ -147,4 +188,22 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       OpLog.readStringMap(bytes.toString("UTF-8"))
     } finally in.close()
   }
+
+  /** The info hash without the engine's own bookkeeping keys: what
+    * `repo_info` reports (the reference's hash holds only `commit` and
+    * `repo_url`). */
+  def publicInfo(name: String): Map[String, String] =
+    getInfo(name) - GraphStore.NextIdKey
+}
+
+object GraphStore {
+  /** Info key of the node-ID high-water mark (see [[GraphStore.load]]). */
+  private[graph] val NextIdKey = "next_id"
+}
+
+/** One repo as a read request sees it: the resident [[ServingIndex]] when
+  * the repo has one, else the stored DataFrame snapshot, loaded on first
+  * use ([[GraphStore.view]]). */
+final class GraphView(val index: Option[ServingIndex], load: => PropertyGraph) {
+  lazy val graph: PropertyGraph = load
 }

@@ -32,16 +32,22 @@ final case class ChangeSummary(
   * `summary` is lazy: counting changed rows costs extra Spark jobs, and the
   * only consumer that needs it is backlog change detection
   * (`api/graph.py:152-169`) plus tests. Callers that never read it (bulk
-  * ingest, bench) pay zero driver-side actions per mutation. */
+  * ingest, bench) pay zero driver-side actions per mutation.
+  *
+  * `cached` lists the frames the mutation cached: `graph` and `result` read
+  * them until the graph is pinned, and [[CodeGraph.checkpointNow]] releases
+  * them after pinning it (left cached, Spark's cache manager would keep
+  * their plans, and the checkpointed RDDs those plans read, for the life
+  * of the session). */
 final class MutationResult(val graph: PropertyGraph, val result: DataFrame,
-    summaryThunk: () => ChangeSummary) {
+    summaryThunk: () => ChangeSummary, val cached: Seq[DataFrame]) {
   lazy val summary: ChangeSummary = summaryThunk()
 }
 
 object MutationResult {
   def apply(graph: PropertyGraph, result: DataFrame,
-      summary: => ChangeSummary): MutationResult =
-    new MutationResult(graph, result, () => summary)
+      summary: => ChangeSummary, cached: Seq[DataFrame] = Nil): MutationResult =
+    new MutationResult(graph, result, () => summary, cached)
 }
 
 /** All graph mutations as pure `PropertyGraph => PropertyGraph` rewrites
@@ -250,7 +256,8 @@ object Mutations {
       resultIds,
       // doc assignment counts ≥1 property per upsert
       ChangeSummary(nodesCreated = nInserted,
-        propertiesSet = nInserted + upd.count()))
+        propertiesSet = nInserted + upd.count()),
+      cached = Seq(b, joined))
   }
 
   def addEntity(g: PropertyGraph, label: String, name: String, path: String,
@@ -307,7 +314,8 @@ object Mutations {
       g.copy(nodes = nodes2, nextIdHint = Some(startId + nInserted),
         nodesKnownEmpty = false),
       resultIds,
-      ChangeSummary(nodesCreated = nInserted))
+      ChangeSummary(nodesCreated = nInserted),
+      cached = Seq(b, joined))
   }
 
   def addFile(g: PropertyGraph, path: String, name: String,
@@ -339,7 +347,7 @@ object Mutations {
         edgeSchema)
       return MutationResult(g.copy(edges = edges3, edgesKnownEmpty = false),
         b.select(col("src"), col("dst"), col("type")),
-        ChangeSummary(relationshipsCreated = b.count()))
+        ChangeSummary(relationshipsCreated = b.count()), cached = Seq(b))
     }
 
     val ex = g.edges.select(col("src"), col("dst"), col("type")).distinct()
@@ -367,7 +375,7 @@ object Mutations {
           .head().getLong(0)
         ChangeSummary(relationshipsCreated = toInsert.count(),
           propertiesSet = nUpdatedProps)
-      })
+      }, cached = Seq(b))
   }
 
   def connectEntities(g: PropertyGraph, relType: String, src: Long, dst: Long,
@@ -408,7 +416,7 @@ object Mutations {
       if (g.edgesKnownEmpty) insertedEdges
       else conform(g.edges, edgeSchema).unionByName(insertedEdges)
     MutationResult(g.copy(edges = edges2, edgesKnownEmpty = false), b,
-      ChangeSummary(relationshipsCreated = toInsert.count()))
+      ChangeSummary(relationshipsCreated = toInsert.count()), cached = Seq(b))
   }
 
   // ---------------------------------------------------------------- M5
@@ -489,7 +497,7 @@ object Mutations {
     MutationResult(
       g.copy(nodes = conform(nodes2, nodeSchema)),
       t.select(col("_uid").as("id")),
-      ChangeSummary(propertiesSet = t.count()))
+      ChangeSummary(propertiesSet = t.count()), cached = Seq(t))
   }
 
   // ---------------------------------------------------------------- M7

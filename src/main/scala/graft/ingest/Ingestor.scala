@@ -361,6 +361,9 @@ object Ingestor {
     g.connectEntities(typedEdges)
 
     extracted.unpersist()
+    // the unpinned snapshot still reads these batches: releasing them before
+    // the caller's checkpointNow would recompute extraction and ID assignment
+    g.releaseAtCheckpoint(entitiesRaw, refsRaw, fileBatch)
     // snapshot the post-ingest graph NOW: `g` is mutable, so a lazily
     // forced counter must not observe later mutations
     val endGraph = g.graph

@@ -17,19 +17,7 @@ class EndpointsSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-api-wh").toString
     val s = new GraphStore(spark, wh)
     val g = new CodeGraph(spark, "proj", Some(s))
-    Ingestor.ingest(g, Seq(Ingestor.SourceFile("src.py", Seq(
-      "def setup(env):",
-      "    configure(env)",
-      "",
-      "def set_output(path):",
-      "    setup(path)",
-      "",
-      "def configure(env):",
-      "    print(env)",
-      "",
-      "class Runner:",
-      "    def run(self):",
-      "        set_output('x')").mkString("\n"))))
+    Ingestor.ingest(g, EndpointsSpec.fixture)
     g.checkpointNow(); g.save()
     s
   }
@@ -143,6 +131,9 @@ class EndpointsSpec extends SparkSpec {
     assert(info.status == "success")
     assert(info.body.get("info").get("nodes_count").asLong() > 0)
     assert(info.body.get("info").get("edges_count").asLong() > 0)
+    // the stored ID high-water mark is engine bookkeeping, not repo info
+    assert(store.getInfo("proj").contains("next_id"))
+    assert(!info.body.get("info").has("next_id"))
 
     // canned client: exact response pass-through (llm.py ask contract)
     val canned = new CannedChatClient(Map("hello" -> "world"))
@@ -256,4 +247,22 @@ class EndpointsSpec extends SparkSpec {
     assert(cloned.nodes.filter(org.apache.spark.sql.functions.col("name")
       === "remote_fn").count() == 1)
   }
+}
+
+object EndpointsSpec {
+  /** The endpoint fixture: one module with a call chain, a builtin call
+    * and a method. */
+  val fixture: Seq[Ingestor.SourceFile] = Seq(Ingestor.SourceFile("src.py", Seq(
+    "def setup(env):",
+    "    configure(env)",
+    "",
+    "def set_output(path):",
+    "    setup(path)",
+    "",
+    "def configure(env):",
+    "    print(env)",
+    "",
+    "class Runner:",
+    "    def run(self):",
+    "        set_output('x')").mkString("\n")))
 }

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths => JPaths}
 
 import scala.sys.process._
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import graft.api.{Endpoints, RuleChatClient}
 import graft.graph.{CodeGraph, GraphQueries, GraphStore}
 
 /** F4–F6 end to end, mirroring the reference's 4-commit fixture narrative
@@ -122,6 +125,36 @@ class GitHistorySpec extends SparkSpec {
     g = graph()
     assert(fileExists(g, "a.py") && fileExists(g, "c.py") && !fileExists(g, "b.py"))
     assert(store.getInfo(repoName)("commit") == c4)
+  }
+
+  test("switch_commit drops the serving index: reads follow HEAD -> root -> HEAD") {
+    val (repoDir, hashes) = makeRepo()
+    val Seq(c1, _, _, c4) = hashes
+    val warehouse = Files.createTempDirectory("graft-wh").toString
+    val store = new GraphStore(spark, warehouse)
+    val repoName = "served_repo"
+    GitHistory.analyzeRepo(spark, store, repoDir, repoName)
+    GitHistory.buildCommitGraph(spark, store, repoDir, repoName)
+    val api = new Endpoints(spark, store, RuleChatClient)
+    val dfStore = new GraphStore(spark, warehouse)
+    dfStore.servingLimit = -1
+    val dfApi = new Endpoints(spark, dfStore, RuleChatClient)
+    // reads through the index (built by the first of them) against reads
+    // of the stored graph; returns the searchable names
+    def read(): Set[String] = {
+      assert(api.graphEntities(Some(repoName)).json ==
+        dfApi.graphEntities(Some(repoName)).json)
+      assert(api.repoInfo(Some(repoName)).json == dfApi.repoInfo(Some(repoName)).json)
+      assert(store.servingIndex(repoName).isDefined)
+      api.autoComplete(Some(repoName), Some("")).body.get("completions")
+        .elements().asScala.map(_.get("properties").get("name").asText()).toSet
+    }
+    val atHead = Set("a.py", "c.py", "alpha", "alpha2", "gamma")
+    assert(read() == atHead)
+    assert(api.switchCommit(Some(repoName), Some(c1)).code == 200)
+    assert(read() == Set("a.py", "alpha"))
+    assert(api.switchCommit(Some(repoName), Some(c4)).code == 200)
+    assert(read() == atHead)
   }
 
   test("classify_changes filters by extension and ignore list") {
