@@ -1,8 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.functions._
-
-import graft.graph.{GraphQueries, GraphView}
+import graft.graph.GraphReader
 
 /** F11 — the NL→graph-query chat surface (`/root/reference/api/llm.py`).
   *
@@ -45,17 +43,17 @@ object Ontology {
   }
 }
 
-/** Pluggable model hook — `ask` mirrors `api/llm.py:260-267`. `g` is the
-  * repo as the request sees it (its serving index or its snapshot). */
+/** Pluggable model hook — `ask` mirrors `api/llm.py:260-267`. `g` reads
+  * the repo ([[graft.graph.GraphStore.view]]). */
 trait ChatClient {
-  def ask(repo: String, question: String, g: GraphView): String
+  def ask(repo: String, question: String, g: GraphReader): String
 }
 
 /** Test double: fixed responses keyed by question (records calls). */
 final class CannedChatClient(answers: Map[String, String],
     default: String = "I don't know.") extends ChatClient {
   val asked = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  def ask(repo: String, question: String, g: GraphView): String = {
+  def ask(repo: String, question: String, g: GraphReader): String = {
     asked += ((repo, question))
     answers.getOrElse(question, default)
   }
@@ -65,10 +63,9 @@ final class CannedChatClient(answers: Map[String, String],
   * of the reference's Cypher generation target: constrained to queries the
   * engine executes natively, so a model answer can never inject free-form
   * query text. Shared by [[RuleChatClient]] (regex → intent) and
-  * [[HttpChatClient]] (model → intent JSON). Each intent reads the repo's
-  * serving index when it has one, else runs its DataFrame query. */
+  * [[HttpChatClient]] (model → intent JSON). */
 object ChatIntents {
-  def execute(op: String, arg: String, g: GraphView): String = op match {
+  def execute(op: String, arg: String, g: GraphReader): String = op match {
     case "who_calls" =>
       val callers = callNeighbours(g, arg, incoming = true)
       if (callers.isEmpty) s"No callers of $arg found."
@@ -82,12 +79,7 @@ object ChatIntents {
         case "Classe" => "Class"
         case l => l
       }
-      val names = g.index.fold(
-        g.graph.nodes
-          .filter(array_contains(col("labels"), label))
-          .select(col("name")).orderBy(col("name")).limit(25)
-          .collect().map(_.getString(0)).toSeq
-      )(_.namesWithLabel(label, 25))
+      val names = g.namesWithLabel(label, 25)
       if (names.isEmpty) s"No $label entities found."
       else s"$label entities: ${names.mkString(", ")}"
     case _ =>
@@ -96,20 +88,9 @@ object ChatIntents {
 
   /** Distinct, sorted names of the callers (`incoming`) or callees of the
     * functions named `name`. */
-  private def callNeighbours(g: GraphView, name: String,
-      incoming: Boolean): Seq[String] = {
-    val names = g.index match {
-      case Some(ix) => ix.callNeighbourNames(name, incoming)
-      case None =>
-        val (df, column) =
-          if (incoming) (GraphQueries.functionCalledBy(g.graph, name), "callers")
-          else (GraphQueries.functionCalls(g.graph, name), "callees")
-        df.collect().toSeq
-          .flatMap(r => Option(r.getAs[scala.collection.Seq[String]](column)))
-          .flatten
-    }
-    names.distinct.sorted
-  }
+  private def callNeighbours(g: GraphReader, name: String,
+      incoming: Boolean): Seq[String] =
+    g.callNeighbourNames(name, incoming).distinct.sorted
 }
 
 /** Default stub: rule-based NL→query translation over the ontology's verbs
@@ -119,7 +100,7 @@ object RuleChatClient extends ChatClient {
   private val WhatCalls = """(?i).*what does (\w+) call.*""".r
   private val ListLabel = """(?i).*(?:list|how many) (\w+?)(?:es|s)?\b.*""".r
 
-  def ask(repo: String, question: String, g: GraphView): String =
+  def ask(repo: String, question: String, g: GraphReader): String =
     question match {
       case WhoCalls(name) => ChatIntents.execute("who_calls", name, g)
       case WhatCalls(name) => ChatIntents.execute("calls_of", name, g)
@@ -173,7 +154,7 @@ final class HttpChatClient(baseUrl: String, model: String,
       .path("choices").path(0).path("message").path("content").asText("")
   }
 
-  def ask(repo: String, question: String, g: GraphView): String = {
+  def ask(repo: String, question: String, g: GraphReader): String = {
     val intentSystem =
       "You translate questions about the code graph of repository '" +
         repo + "' into exactly one intent.\n" + Ontology.describe +

@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.git.{GitCli, GitHistory}
 import graft.graph._
@@ -93,10 +92,8 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     e
   }
 
-  private def loadGraph(repo: String): PropertyGraph = store.load(repo)
-
   /** {nodes, edges} under `key`: the shared tail of `graph_entities` and
-    * `get_neighbors`, whichever path produced the rows. */
+    * `get_neighbors`. */
   private def subGraphResponse(key: String, nodeRows: Seq[Row],
       edgeTriples: Seq[(String, Long, Long)]): ApiResponse = {
     val nodes = mapper.createArrayNode()
@@ -118,20 +115,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case None | Some("") => err("Missing 'repo' parameter")
       case Some(r) if !store.exists(r) => missingProject(r)
       case Some(r) =>
-        val (nodeRows, edges) = store.servingIndex(r) match {
-          case Some(ix) => ix.subGraph(500)
-          case None =>
-            val g = loadGraph(r)
-            val sub = GraphQueries.getSubGraph(g, 500).collect()
-            val ids = (sub.map(_.getAs[Long]("src_id")) ++
-              sub.filter(!_.isNullAt(4)).map(_.getAs[Long]("dst_id"))).distinct
-            val nodeRows =
-              if (ids.isEmpty) Array.empty[Row]
-              else g.nodes.filter(col("id").isin(ids.toIndexedSeq: _*)).collect()
-            (nodeRows.toSeq, sub.toSeq.filter(row => !row.isNullAt(row.fieldIndex("type")))
-              .map(row => (row.getAs[String]("type"), row.getAs[Long]("src_id"),
-                row.getAs[Long]("dst_id"))))
-        }
+        val (nodeRows, edges) = store.view(r).subGraph(500)
         subGraphResponse("entities", nodeRows, edges)
     }
   }
@@ -152,19 +136,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
               case i: Int => i.toLong
               case l: Long => l
             }
-            val (nodeRows, edges) = store.servingIndex(r) match {
-              case Some(ix) => ix.neighbors(longIds)
-              case None =>
-                val g = loadGraph(r)
-                val out = GraphQueries.getNeighbors(g, longIds).collect()
-                val destIds = out.map(_.getAs[Long]("id")).distinct
-                val nodeRows =
-                  if (destIds.isEmpty) Array.empty[Row]
-                  else g.nodes.filter(col("id").isin(destIds.toIndexedSeq: _*))
-                    .collect()
-                (nodeRows.toSeq, out.toSeq.map(row => (row.getAs[String]("type"),
-                  row.getAs[Long]("src"), row.getAs[Long]("id"))))
-            }
+            val (nodeRows, edges) = store.view(r).neighbors(longIds)
             subGraphResponse("neighbors", nodeRows, edges)
         }
     }
@@ -178,9 +150,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case (Some(r), _) if !store.exists(r) => missingProject(r)
       case (Some(r), Some(p)) =>
         val completions = mapper.createArrayNode()
-        store.servingIndex(r).fold(
-          GraphQueries.autoComplete(loadGraph(r), p).collect().toSeq
-        )(_.autoComplete(p)).foreach { row =>
+        store.view(r).autoComplete(p).foreach { row =>
           val n = mapper.createObjectNode()
           n.put("id", row.getAs[Long]("id"))
           val props = n.putObject("properties")
@@ -205,12 +175,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     case Some(r) if !store.exists(r) => err(s"Missing repository \"$r\"")
     case Some(r) =>
       val info = mapper.createObjectNode()
-      val counts = store.servingIndex(r) match {
-        case Some(ix) => Seq("nodes" -> ix.nodeCount, "edges" -> ix.edgeCount)
-        case None => GraphQueries.stats(loadGraph(r)).collect().toSeq
-          .map(row => row.getAs[String]("entity") -> row.getAs[Long]("n"))
-      }
-      counts.foreach { case (entity, n) => info.put(entity + "_count", n) }
+      store.view(r).counts.foreach { case (entity, n) => info.put(entity + "_count", n) }
       store.publicInfo(r).foreach { case (k, v) => info.put(k, v) }
       resp(200, "status" -> "success", "info" -> info)
   }
@@ -237,38 +202,10 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     }
     val r = repo.get
     if (!store.exists(r)) return missingProject(r)
-    val (pathIds, node, callEdge) = store.servingIndex(r) match {
-      case Some(ix) =>
-        (ix.findPaths(srcId, destId), ix.node _,
-          (a: Long, b: Long) => ix.lastEdge(a, b))
-      case None =>
-        val g = loadGraph(r)
-        val pathIds = Paths.findPaths(g, srcId, destId).collect().toSeq
-          .map(_.getAs[scala.collection.Seq[Long]]("path").toSeq)
-        // one nodes fetch + one edges fetch for ALL paths, then assemble
-        val allIds = pathIds.flatten.distinct
-        val nodeMap =
-          if (allIds.isEmpty) Map.empty[Long, Row]
-          else g.nodes.filter(col("id").isin(allIds: _*)).collect()
-            .map(row => row.getAs[Long]("id") -> row).toMap
-        val callEdges =
-          if (allIds.isEmpty) Map.empty[(Long, Long), Row]
-          else g.edges.filter(col("type") === "CALLS" && col("src").isin(allIds: _*))
-            .collect().map(row =>
-              (row.getAs[Long]("src"), row.getAs[Long]("dst")) -> row).toMap
-        (pathIds, nodeMap.get _, (a: Long, b: Long) => callEdges.get((a, b)))
-    }
     val paths = mapper.createArrayNode()
-    pathIds.foreach { ids =>
-      val p = mapper.createArrayNode()
-      ids.sliding(2).foreach {
-        case Seq(a, b) =>
-          node(a).foreach(n => p.add(encodeNode(n)))
-          callEdge(a, b).foreach(e => p.add(encodeEdge(e)))
-        case _ => ()
-      }
-      ids.lastOption.flatMap(node).foreach(n => p.add(encodeNode(n)))
-      paths.add(p)
+    store.view(r).findPaths(srcId, destId).foreach { steps =>
+      val p = paths.addArray()
+      steps.foreach(step => p.add(step.fold(encodeNode, encodeEdge)))
     }
     resp(200, "status" -> "success", "paths" -> paths)
   }
@@ -380,7 +317,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
   def listCommits(repo: Option[String]): ApiResponse = repo match {
     case None => err("Missing mandatory parameter \"repo\"")
     case Some(r) =>
-      val gitG = loadGraph(GitHistory.gitRepoName(r))
+      val gitG = store.load(GitHistory.gitRepoName(r))
       val commits = mapper.createArrayNode()
       GraphQueries.listCommits(gitG).collect().foreach { row =>
         val c = mapper.createObjectNode()

@@ -1,6 +1,10 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Parquet warehouse: one directory per repo graph (SURVEY.md §1.6).
@@ -22,11 +26,13 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * `nodes`/`edges` are partitioned parquet dirs and the same swap protocol
   * applies per partition.
   *
-  * Serving: a repo whose tables fit [[servingLimit]] is read from a resident
-  * [[ServingIndex]], built on the first read after a write and dropped by
-  * every write through this store ([[save]], [[delete]], [[cloneGraph]]
-  * onto it, [[setInfo]]); writes made through another `GraphStore` on the
-  * same warehouse are not seen (the single-writer contract).
+  * Serving: [[view]] reads a repo whose tables fit [[servingLimit]] from a
+  * resident [[ServingIndex]], built on the first read after a write and
+  * dropped by every write through this store ([[save]], [[delete]],
+  * [[cloneGraph]] onto it, [[setInfo]]); writes made through another
+  * `GraphStore` on the same warehouse are not seen (the single-writer
+  * contract). The resident indexes of all repos together keep within the
+  * same bound: the least recently read ones are dropped first.
   */
 final class GraphStore(spark: SparkSession, val warehouse: String) {
 
@@ -68,34 +74,74 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   // ---- resident serving index --------------------------------------------
 
   /** Row bound of the serving index, per table: [[Paths.EdgeBroadcastLimit]],
-    * the same bound under which `find_paths` broadcasts the edge set. A
-    * repo over it keeps the DataFrame reads. Package-private so a spec can
-    * send reads down the DataFrame path (-1 admits no repo). */
+    * the same bound under which `find_paths` broadcasts the edge set (taken
+    * over, not measured for the index's own memory). A repo over it keeps
+    * the DataFrame reads. Package-private so a spec can send reads down the
+    * DataFrame path (-1 admits no repo) or force evictions. */
   @volatile private[graft] var servingLimit: Long = Paths.EdgeBroadcastLimit
 
-  // per repo: the index of its current version, or None when over the bound
-  private val served = scala.collection.mutable.HashMap.empty[String, Option[ServingIndex]]
+  // per repo, least recently read first: the index of its current version,
+  // or None when it is over the bound
+  private val served = mutable.LinkedHashMap.empty[String, Option[ServingIndex]]
   private var writes = 0L
 
   /** The resident index of `name`'s current version, built on the first call
     * after a write; None when the repo does not exist or is over
-    * [[servingLimit]] (that result is kept until the next write too). */
-  def servingIndex(name: String): Option[ServingIndex] = {
-    val (known, seen) = synchronized((served.get(name), writes))
+    * [[servingLimit]] (that result is kept until the next write too). The
+    * size check reads the parquet footers, so an over-bound repo costs no
+    * row fetch. */
+  private[graft] def servingIndex(name: String): Option[ServingIndex] = {
+    val (known, seen) = synchronized {
+      (served.remove(name).map { k => served(name) = k; k }, writes)
+    }
     known.getOrElse {
       if (!exists(name)) None
       else {
-        val built = ServingIndex.build(load(name), servingLimit)
+        val fits = Seq(nodesDir(name), edgesDir(name)).forall(tableRows(_) <= servingLimit)
+        val built = if (fits) Some(ServingIndex.build(load(name))) else None
         // a write that finished during the build may have made it stale
-        synchronized { if (writes == seen) served(name) = built }
+        synchronized { if (writes == seen) { served(name) = built; evict() } }
         built
       }
     }
   }
 
-  /** `name` as a read request sees it: the serving index when it has one,
-    * else the stored snapshot, loaded on first use. */
-  def view(name: String): GraphView = new GraphView(servingIndex(name), load(name))
+  /** Drops the least recently read indexes, never the latest, until the
+    * resident ones hold at most [[servingLimit]] rows per table together. */
+  private def evict(): Unit = {
+    var resident = served.toList.collect { case (n, Some(ix)) => (n, ix) }
+    def over(rows: ServingIndex => Long) = resident.iterator.map(r => rows(r._2)).sum > servingLimit
+    while (resident.size > 1 && (over(_.nodeCount) || over(_.edgeCount))) {
+      served -= resident.head._1
+      resident = resident.tail
+    }
+  }
+
+  /** Repos with a resident index, least recently read first. */
+  private[graft] def residentRepos: Seq[String] =
+    synchronized(served.toList.collect { case (n, Some(_)) => n })
+
+  /** Rows of the parquet table under `dir`, summed from its file footers: no
+    * Spark job and no row read. Hidden files (`_SUCCESS`, `.crc`) are
+    * skipped, as a scan skips them. */
+  private def tableRows(dir: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = fs.listFiles(dir, true)
+    var rows = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) {
+        val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try rows += footer.getRecordCount finally footer.close()
+      }
+    }
+    rows
+  }
+
+  /** `name` as a read request sees it: its resident index when it is within
+    * the guard, else DataFrame queries over the stored snapshot. */
+  def view(name: String): GraphReader =
+    servingIndex(name).getOrElse(new SnapshotReader(load(name)))
 
   private def written[T](name: String)(write: => T): T =
     try write finally synchronized { served -= name; writes += 1 }
@@ -199,11 +245,4 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
 object GraphStore {
   /** Info key of the node-ID high-water mark (see [[GraphStore.load]]). */
   private[graph] val NextIdKey = "next_id"
-}
-
-/** One repo as a read request sees it: the resident [[ServingIndex]] when
-  * the repo has one, else the stored DataFrame snapshot, loaded on first
-  * use ([[GraphStore.view]]). */
-final class GraphView(val index: Option[ServingIndex], load: => PropertyGraph) {
-  lazy val graph: PropertyGraph = load
 }

@@ -2,18 +2,18 @@ package graft.graph
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Resident, driver-local copy of one small repo graph: the serving side of
-  * [[GraphStore.servingIndex]]. Point reads — the sub-graph, neighbours,
-  * prefix completion, `find_paths`, the chat intents and the counts — answer
-  * from driver arrays in zero Spark jobs, instead of re-listing the parquet
-  * and planning a fresh query per request (Dremel's posture: interactive
-  * latency from resident data, PAPERS.md).
+/** Resident, driver-local copy of one small repo graph: the [[GraphReader]]
+  * that [[GraphStore.view]] returns for a repo within its guard. Point reads
+  * — the sub-graph, neighbours, prefix completion, `find_paths`, the chat
+  * intents and the counts — answer from driver arrays in zero Spark jobs,
+  * instead of re-listing the parquet and planning a fresh query per request
+  * (Dremel's posture: interactive latency from resident data, PAPERS.md).
   *
   * Layout, all in the snapshot's SCAN order (row `i` is the `i`-th row a
   * plain scan of the stored table returns, which is the order the
@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    lists of edge rows, each entry carrying the row of the other end;
   *  - the rows of `Searchable` nodes.
   *
-  * Each read mirrors one DataFrame read of `Endpoints`/`GraphQueries`/
-  * [[Paths.findPaths]], row for row; where that read's order is fixed by the
-  * plan (a scan, a limit over a broadcast join) the index keeps it.
+  * Each read mirrors the same read of [[SnapshotReader]], row for row;
+  * where that read's order is fixed by the plan (a scan, a limit over a
+  * broadcast join) the index keeps it.
   *
   * Edges whose endpoints are not both nodes take no part in the adjacency.
   * Every mutation keeps edges between existing nodes (connect and call
@@ -39,7 +39,7 @@ final class ServingIndex private (
     ids: Array[Long],
     nodeCols: Array[Array[AnyRef]], // per nodeSchema field; 0 (id) unused
     edgeSrc: Array[Long], edgeDst: Array[Long], edgeTypes: Array[String],
-    edgeLine: Array[AnyRef], edgeText: Array[String]) {
+    edgeLine: Array[AnyRef], edgeText: Array[String]) extends GraphReader {
   import ServingIndex._
 
   private val nodeNames = nodeCols(GraphSchema.nodeSchema.fieldIndex("name"))
@@ -57,6 +57,7 @@ final class ServingIndex private (
 
   def nodeCount: Long = ids.length.toLong
   def edgeCount: Long = edgeSrc.length.toLong
+  def counts: Seq[(String, Long)] = Seq("nodes" -> nodeCount, "edges" -> edgeCount)
 
   /** Row of node `id`, or -1. */
   private def rowOf(id: Long): Int = {
@@ -104,7 +105,7 @@ final class ServingIndex private (
   }
 
   /** Node `id`'s row, if it is a node. */
-  def node(id: Long): Option[Row] = Some(rowOf(id)).filter(_ >= 0).map(nodeRow)
+  private def node(id: Long): Option[Row] = Some(rowOf(id)).filter(_ >= 0).map(nodeRow)
 
   private def edgeRow(e: Int): Row = new GenericRowWithSchema(
     Array[Any](edgeSrc(e), edgeDst(e), edgeTypes(e), edgeLine(e), edgeText(e)),
@@ -157,12 +158,17 @@ final class ServingIndex private (
       name != null && name.startsWith(prefix)
     }.take(limit).map(nodeRow).toIndexedSeq
 
+  /** `find_paths`: the paths of [[pathIds]], each CALLS hop encoded as the
+    * last such edge in scan order when the pair has several. */
+  def findPaths(srcId: Long, dstId: Long): IndexedSeq[Seq[Either[Row, Row]]] =
+    GraphReader.interleave(pathIds(srcId, dstId), node, lastEdge(_, _))
+
   /** [[Paths.findPaths]] as a driver-side depth-first walk with the same
     * semantics: every simple path from `srcId` to `dstId` over `edgeType`
     * edges of at most `maxHops` hops, none passing through `dstId`;
     * parallel edges count once. Paths come shortest first, like the
     * DataFrame walk's level order. */
-  def findPaths(srcId: Long, dstId: Long, edgeType: String = "CALLS",
+  private def pathIds(srcId: Long, dstId: Long, edgeType: String = "CALLS",
       maxHops: Int = Paths.DefaultMaxHops): IndexedSeq[Seq[Long]] = {
     if (srcId == dstId) return IndexedSeq(Seq(srcId))
     val (s, t) = (rowOf(srcId), rowOf(dstId))
@@ -189,7 +195,7 @@ final class ServingIndex private (
 
   /** The `edgeType` edge `src -> dst` that `find_paths` encodes: the last
     * one in scan order when the pair has several. */
-  def lastEdge(src: Long, dst: Long, edgeType: String = "CALLS"): Option[Row] = {
+  private def lastEdge(src: Long, dst: Long, edgeType: String = "CALLS"): Option[Row] = {
     val v = rowOf(src)
     if (v < 0) None
     else outAdj.get(edgeType).flatMap(_.edges(v).reverseIterator
@@ -231,19 +237,12 @@ object ServingIndex {
     def peers(v: Int): IndexedSeq[Int] = other.slice(off(v), off(v + 1)).toIndexedSeq
   }
 
-  /** Collects `g` when each table holds at most `limit` rows, else None. Per
-    * table one `limit(limit + 1)` collect both probes the size and fetches
-    * the rows, in scan order. */
-  def build(g: PropertyGraph, limit: Long): Option[ServingIndex] = {
-    def upTo(df: DataFrame): Option[Array[Row]] = {
-      val rows = df.limit(math.min(limit + 1, Int.MaxValue.toLong).toInt).collect()
-      if (rows.length > limit) None else Some(rows)
-    }
-    for {
-      edges <- upTo(g.edges.select(EdgeCols.map(col): _*))
-      nodes <- upTo(g.nodes.select(GraphSchema.nodeSchema.fieldNames.toIndexedSeq.map(col): _*))
-    } yield fromRows(nodes, edges)
-  }
+  /** Collects `g`, one collect per table, its rows in scan order. The
+    * caller checks the size first ([[GraphStore.view]]'s guard). */
+  def build(g: PropertyGraph): ServingIndex =
+    fromRows(
+      g.nodes.select(GraphSchema.nodeSchema.fieldNames.toIndexedSeq.map(col): _*).collect(),
+      g.edges.select(EdgeCols.map(col): _*).collect())
 
   private def fromRows(nodes: Array[Row], edges: Array[Row]): ServingIndex = {
     // equal values (labels arrays, paths, edge types, call texts, empty

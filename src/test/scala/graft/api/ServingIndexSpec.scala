@@ -11,10 +11,11 @@ import graft.SparkSpec
 import graft.graph.{CodeGraph, GraphQueries, GraphStore}
 import graft.ingest.Ingestor
 
-/** The resident serving index ([[GraphStore.servingIndex]]) against the
-  * DataFrame reads it replaces: every read endpoint returns the same JSON on
-  * both paths, the index path runs no Spark job, and every write through
-  * the store makes the next read see the new graph. */
+/** The resident serving index ([[GraphStore.view]] of a repo within the
+  * guard) against the DataFrame reads of [[graft.graph.SnapshotReader]]:
+  * every read endpoint returns the same JSON on both paths, the index path
+  * runs no Spark job, every write through the store makes the next read see
+  * the new graph, and the resident indexes keep within the bound. */
 class ServingIndexSpec extends SparkSpec {
   import ServingIndexSpec._
 
@@ -196,6 +197,28 @@ class ServingIndexSpec extends SparkSpec {
     indexed.cloneGraph("work", "other")
     same("other")
     assert(!has("other", "m") && has("other", "set"))
+  }
+
+  test("resident indexes keep within the bound together, least recently read dropped first") {
+    val (indexed, df) = stores()
+    build(indexed, "a", tree(2))
+    build(indexed, "b", tree(3))
+    val api = new Endpoints(spark, indexed, RuleChatClient)
+    val dfApi = new Endpoints(spark, df, RuleChatClient)
+    def read(repo: String): Unit =
+      assert(api.graphEntities(Some(repo)).json == dfApi.graphEntities(Some(repo)).json)
+    read("a"); read("b"); read("a")
+    assert(indexed.residentRepos == Seq("b", "a"))
+
+    // a bound the larger repo fits alone, but not with the other one
+    val big = indexed.servingIndex("b").get
+    val bounded = new GraphStore(spark, df.warehouse)
+    bounded.servingLimit = math.max(big.nodeCount, big.edgeCount)
+    val boundedApi = new Endpoints(spark, bounded, RuleChatClient)
+    for (repo <- Seq("a", "b", "a", "b")) {
+      assert(boundedApi.graphEntities(Some(repo)).json == dfApi.graphEntities(Some(repo)).json)
+      assert(bounded.residentRepos == Seq(repo))
+    }
   }
 }
 
