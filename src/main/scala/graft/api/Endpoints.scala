@@ -1,7 +1,10 @@
 package graft.api
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{Row, SparkSession}
 
@@ -24,11 +27,23 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
 
   private val mapper = OpLog.mapper
 
-  final case class ApiResponse(code: Int, body: ObjectNode) {
+  /** A reply: its status code and its JSON, encoded once as UTF-8. */
+  final class ApiResponse private[Endpoints] (val code: Int, val bytes: Array[Byte]) {
+    /** The JSON as a tree, parsed from [[bytes]]. */
+    lazy val body: ObjectNode = mapper.readTree(bytes).asInstanceOf[ObjectNode]
     def status: String =
       Option(body.get("status")).map(_.asText()).getOrElse("")
-    def json: String = mapper.writeValueAsString(body)
+    def json: String = new String(bytes, UTF_8)
   }
+
+  // the graph_entities reply of each resident index, encoded on its first
+  // read: weak keys tie an entry's life to its index's, so the write that
+  // drops an index drops its reply too
+  private val entityReplies = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[ServingIndex, Array[Byte]]())
+
+  /** Replies cached for resident indexes that are still reachable. */
+  private[graft] def cachedReplies: Int = entityReplies.size()
 
   private def resp(code: Int, fields: (String, Any)*): ApiResponse = {
     val node = mapper.createObjectNode()
@@ -39,7 +54,7 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
       case (k, v: Long) => node.put(k, v)
       case (k, v) => node.set[JsonNode](k, mapper.valueToTree[JsonNode](v))
     }
-    ApiResponse(code, node)
+    new ApiResponse(code, Endpoints.Writer.writeValueAsBytes(node))
   }
   private def err(msg: String): ApiResponse = resp(400, "status" -> msg)
   private def missingProject(repo: String): ApiResponse =
@@ -114,10 +129,18 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
     repo match {
       case None | Some("") => err("Missing 'repo' parameter")
       case Some(r) if !store.exists(r) => missingProject(r)
-      case Some(r) =>
-        val (nodeRows, edges) = store.view(r).subGraph(500)
-        subGraphResponse("entities", nodeRows, edges)
+      case Some(r) => store.view(r) match {
+        case ix: ServingIndex =>
+          new ApiResponse(200,
+            entityReplies.computeIfAbsent(ix, (i: ServingIndex) => entities(i).bytes))
+        case g => entities(g)
+      }
     }
+  }
+
+  private def entities(g: GraphReader): ApiResponse = {
+    val (nodeRows, edges) = g.subGraph(500)
+    subGraphResponse("entities", nodeRows, edges)
   }
 
   /** POST /get_neighbors (`index.py:97-144`). */
@@ -332,6 +355,12 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
 }
 
 object Endpoints {
+  /** Encodes replies as UTF-8 bytes, a supplementary character as its four
+    * bytes (Jackson's default writes an escaped surrogate pair instead), so
+    * the bytes equal those of the JSON text encoded as UTF-8. */
+  private val Writer = OpLog.mapper.writer()
+    .`with`(JsonWriteFeature.COMBINE_UNICODE_SURROGATES_IN_UTF8)
+
   /** The model wiring mirrors `api/llm.py:238` (MODEL_NAME env): when
     * GRAFT_LLM_BASE_URL is set the chat endpoint speaks to that
     * OpenAI-compatible server (GRAFT_LLM_MODEL, optional

@@ -3,6 +3,8 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import com.fasterxml.jackson.databind.JsonNode
 
@@ -25,11 +27,17 @@ import graft.graph.{GraphStore, OpLog}
   * issues driver actions; the heavy lifting stays in the executors. A
   * production deployment would put this on a long-lived SparkSession the
   * same way the reference holds a FalkorDB connection pool.
+  *
+  * Replies leave with `TCP_NODELAY` ([[start]]): most are written in more
+  * than one segment, and without it the last segment waits for the
+  * client's delayed ACK, about 40 ms per request on Linux.
   */
 final class HttpApi(spark: SparkSession, store: GraphStore,
     chat: ChatClient = RuleChatClient,
     secretToken: Option[String] = sys.env.get("SECRET_TOKEN"),
     publicAccess: Boolean = sys.env.get("CODE_GRAPH_PUBLIC").contains("1")) {
+
+  import HttpApi._
 
   private val endpoints = new Endpoints(spark, store, chat)
   private val mapper = OpLog.mapper
@@ -40,7 +48,12 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
 
   /** Binds loopback by default — a fresh deployment without a token should
     * not be reachable off-host (the reference binds all interfaces,
-    * `index.py`; pass bindHost = "0.0.0.0" to match it). */
+    * `index.py`; pass bindHost = "0.0.0.0" to match it).
+    *
+    * Sets `sun.net.httpserver.nodelay`, which the JDK reads once per JVM,
+    * when the first `com.sun.net.httpserver` server is created: an embedder
+    * that creates one before this call must set the property (or pass
+    * `-Dsun.net.httpserver.nodelay=true`) itself, or replies stall. */
   def start(bindPort: Int = 5000, bindHost: String = "127.0.0.1"): Int =
       synchronized {
     require(server.isEmpty, "already started")
@@ -48,6 +61,7 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
       org.slf4j.LoggerFactory.getLogger(classOf[HttpApi]).warn(
         "SECRET_TOKEN is not configured — the API accepts " +
           "Authorization-less requests (reference index.py:26-28 parity)")
+    System.setProperty(NoDelay, "true")
     val s = HttpServer.create(new InetSocketAddress(bindHost, bindPort), 0)
     s.createContext("/", handle _)
     s.setExecutor(null) // serial dispatch — single-writer mutation discipline
@@ -63,16 +77,14 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
 
   // ---- request plumbing ----------------------------------------------
 
-  private def write(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  private def write(ex: HttpExchange, code: Int, bytes: Array[Byte]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(code, bytes.length)
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
 
-  private def unauthorized(ex: HttpExchange): Unit =
-    write(ex, 401, """{"message":"Unauthorized"}""")
+  private def unauthorized(ex: HttpExchange): Unit = write(ex, 401, Unauthorized)
 
   private def tokenOk(ex: HttpExchange): Boolean = {
     val header = Option(ex.getRequestHeaders.getFirst("Authorization"))
@@ -144,8 +156,7 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
       val path = ex.getRequestURI.getPath
       val method = ex.getRequestMethod
       if (!tokenOk(ex)) { unauthorized(ex); return }
-      val publicOnly = Set("/analyze_repo", "/switch_commit", "/list_commits")
-      if (publicOnly(path) && !publicAccess) { unauthorized(ex); return }
+      if (PublicOnly(path) && !publicAccess) { unauthorized(ex); return }
       val resp: Option[Endpoints#ApiResponse] = (method, path) match {
         case ("GET", "/graph_entities") =>
           Some(endpoints.graphEntities(queryParam(ex, "repo")))
@@ -183,19 +194,30 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
         case _ => None
       }
       resp match {
-        case Some(r) => write(ex, r.code, r.json)
-        case None => write(ex, 404, """{"status":"Not found"}""")
+        case Some(r) => write(ex, r.code, r.bytes)
+        case None => write(ex, 404, NotFound)
       }
     } catch {
       case _: BadRequest =>
-        try write(ex, 400, """{"status":"Bad request"}""")
-        catch { case _: Throwable => () }
-      case e: Throwable =>
+        try write(ex, 400, BadRequestReply) catch { case NonFatal(_) => () }
+      case NonFatal(e) =>
         // mirror the reference's per-endpoint catch (`index.py:90-94`)
-        try write(ex, 500, """{"status":"Internal server error"}""")
-        catch { case _: Throwable => () }
-        org.slf4j.LoggerFactory.getLogger(classOf[HttpApi])
-          .warn(s"request failed: ${e.getMessage}")
+        try write(ex, 500, InternalError) catch { case NonFatal(_) => () }
+        org.slf4j.LoggerFactory.getLogger(classOf[HttpApi]).warn(
+          s"request failed: ${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
     } finally ex.close()
   }
+}
+
+object HttpApi {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** Routes that also need public access (`index.py:44-50`). */
+  private val PublicOnly = Set("/analyze_repo", "/switch_commit", "/list_commits")
+
+  private def reply(json: String) = json.getBytes(StandardCharsets.UTF_8)
+  private val Unauthorized = reply("""{"message":"Unauthorized"}""")
+  private val NotFound = reply("""{"status":"Not found"}""")
+  private val BadRequestReply = reply("""{"status":"Bad request"}""")
+  private val InternalError = reply("""{"status":"Internal server error"}""")
 }

@@ -32,7 +32,10 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * [[cloneGraph]] onto it, [[setInfo]]); writes made through another
   * `GraphStore` on the same warehouse are not seen (the single-writer
   * contract). The resident indexes of all repos together keep within the
-  * same bound: the least recently read ones are dropped first.
+  * same bound: the least recently read ones are dropped first. A repo with
+  * a resident index also answers [[exists]] from it and holds its info hash
+  * until the same writes, so a read of a resident repo makes no filesystem
+  * call; a repo over the guard reads both from disk, as before.
   */
 final class GraphStore(spark: SparkSession, val warehouse: String) {
 
@@ -45,7 +48,8 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   private def infoFile(name: String) = new Path(repoDir(name), "info.json")
 
   /** C1: does the graph exist? (`api/graph.py:12-18`) */
-  def exists(name: String): Boolean = fs.exists(nodesDir(name))
+  def exists(name: String): Boolean =
+    synchronized(served.get(name).exists(_.isDefined)) || fs.exists(nodesDir(name))
 
   /** C2: list repos, filtering auxiliary `_git`/`_schema`/`_tmp` graphs
     * (`api/graph.py:20-32`). */
@@ -83,6 +87,8 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   // per repo, least recently read first: the index of its current version,
   // or None when it is over the bound
   private val served = mutable.LinkedHashMap.empty[String, Option[ServingIndex]]
+  // per repo with a resident index, its info hash as last read
+  private val infos = mutable.HashMap.empty[String, Map[String, String]]
   private var writes = 0L
 
   /** The resident index of `name`'s current version, built on the first call
@@ -113,6 +119,7 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     def over(rows: ServingIndex => Long) = resident.iterator.map(r => rows(r._2)).sum > servingLimit
     while (resident.size > 1 && (over(_.nodeCount) || over(_.edgeCount))) {
       served -= resident.head._1
+      infos -= resident.head._1
       resident = resident.tail
     }
   }
@@ -144,7 +151,7 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     servingIndex(name).getOrElse(new SnapshotReader(load(name)))
 
   private def written[T](name: String)(write: => T): T =
-    try write finally synchronized { served -= name; writes += 1 }
+    try write finally synchronized { served -= name; infos -= name; writes += 1 }
 
   /** Persist a snapshot with stage-then-swap (atomic per table).
     *
@@ -225,7 +232,21 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
+  /** The info hash: for a repo with a resident index, read from its file on
+    * the first call after a write. */
   def getInfo(name: String): Map[String, String] = {
+    val (known, seen) = synchronized((infos.get(name), writes))
+    known.getOrElse {
+      val read = readInfo(name)
+      // a write that finished during the read may have made it stale
+      synchronized {
+        if (writes == seen && served.get(name).exists(_.isDefined)) infos(name) = read
+      }
+      read
+    }
+  }
+
+  private def readInfo(name: String): Map[String, String] = {
     if (!fs.exists(infoFile(name))) return Map.empty
     val in = fs.open(infoFile(name))
     try {

@@ -23,7 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - edge columns (`src`, `dst`, `type`, `line`, `text` — what the
   *    endpoints encode), with out- and in-adjacency per edge type as CSR
   *    lists of edge rows, each entry carrying the row of the other end;
-  *  - the rows of `Searchable` nodes.
+  *  - the rows of named nodes sorted by (name, row), so that a name or a
+  *    name prefix is one binary-searched range, its rows of one name in
+  *    scan order.
   *
   * Each read mirrors the same read of [[SnapshotReader]], row for row;
   * where that read's order is fixed by the plan (a scan, a limit over a
@@ -52,8 +54,9 @@ final class ServingIndex private (
   private val outAdj: Map[String, Csr] = adjacency(byOrigin = true)
   private val inAdj: Map[String, Csr] = adjacency(byOrigin = false)
 
-  private val searchable: Array[Int] =
-    ids.indices.filter(hasLabel(_, GraphSchema.SEARCHABLE)).toArray
+  // the sort is stable over ascending rows: equal names stay in scan order
+  private val byName: Array[Int] =
+    ids.indices.filter(nodeNames(_) != null).toArray.sortBy(nameOf)
 
   def nodeCount: Long = ids.length.toLong
   def edgeCount: Long = edgeSrc.length.toLong
@@ -63,6 +66,26 @@ final class ServingIndex private (
   private def rowOf(id: Long): Int = {
     val k = java.util.Arrays.binarySearch(sortedIds, id)
     if (k < 0) -1 else rowById(k)
+  }
+
+  private def nameOf(row: Int): String = nodeNames(row).asInstanceOf[String]
+
+  /** The positions in [[byName]] of the names equal to `name` (`exact`) or
+    * starting with it: `lo until hi`. */
+  private def nameRange(name: String, exact: Boolean): (Int, Int) = {
+    // the first position whose name fails `before`, which holds for a
+    // leading run of the order
+    def end(before: String => Boolean): Int = {
+      var lo = 0
+      var hi = byName.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (before(nameOf(byName(mid)))) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    def in(n: String) = if (exact) n == name else n.startsWith(name)
+    (end(_.compareTo(name) < 0), end(n => n.compareTo(name) < 0 || in(n)))
   }
 
   private def hasLabel(row: Int, label: String): Boolean =
@@ -152,11 +175,19 @@ final class ServingIndex private (
 
   /** `auto_complete`: the first `limit` Searchable nodes in scan order whose
     * name starts with `prefix` ([[GraphQueries.autoComplete]]). */
-  def autoComplete(prefix: String, limit: Int = 10): IndexedSeq[Row] =
-    searchable.iterator.filter { v =>
-      val name = nodeNames(v).asInstanceOf[String]
-      name != null && name.startsWith(prefix)
-    }.take(limit).map(nodeRow).toIndexedSeq
+  def autoComplete(prefix: String, limit: Int = 10): IndexedSeq[Row] = {
+    def searchable(v: Int) = hasLabel(v, GraphSchema.SEARCHABLE)
+    val (lo, hi) = nameRange(prefix, exact = false)
+    val rows =
+      // a wide range (a short prefix) is cheaper to meet in scan order,
+      // where the first `limit` hits end the walk
+      if ((hi - lo).toLong * (hi - lo) > limit.toLong * ids.length)
+        ids.indices.iterator.filter { v =>
+          nodeNames(v) != null && nameOf(v).startsWith(prefix) && searchable(v)
+        }
+      else byName.slice(lo, hi).filter(searchable).sorted.iterator
+    rows.take(limit).map(nodeRow).toIndexedSeq
+  }
 
   /** `find_paths`: the paths of [[pathIds]], each CALLS hop encoded as the
     * last such edge in scan order when the pair has several. */
@@ -208,16 +239,16 @@ final class ServingIndex private (
     * [[GraphQueries.functionCalls]] before their `sort_array`). */
   def callNeighbourNames(name: String, incoming: Boolean): Seq[String] =
     (if (incoming) inAdj else outAdj).get("CALLS").toSeq.flatMap { adj =>
-      ids.indices.filter(v => name == nodeNames(v) && hasLabel(v, "Function"))
-        .flatMap(adj.peers)
-    }.map(nodeNames(_).asInstanceOf[String]).filter(_ != null).distinct
+      val (lo, hi) = nameRange(name, exact = true)
+      byName.slice(lo, hi).filter(hasLabel(_, "Function")).flatMap(adj.peers)
+    }.map(nameOf).filter(_ != null).distinct
 
   /** Names of the nodes labelled `label`, ascending with nulls first in
     * Spark's UTF-8 byte order, the first `limit` of them (`list_label`'s
     * `orderBy(name).limit`). */
   def namesWithLabel(label: String, limit: Int): Seq[String] =
     ids.indices.filter(hasLabel(_, label))
-      .map(v => nodeNames(v).asInstanceOf[String])
+      .map(nameOf)
       .map(n => (n, if (n == null) null else UTF8String.fromString(n)))
       .sortWith { case ((_, a), (_, b)) =>
         if (a == null) b != null else b != null && a.compareTo(b) < 0

@@ -27,6 +27,13 @@ object TestSpark {
 }
 
 abstract class SparkSpec extends AnyFunSuite {
+  // HttpApi turns on TCP_NODELAY through this property, which the JDK reads
+  // once per JVM, when the first com.sun.net.httpserver server is created.
+  // Suites share one forked JVM, and one of them (EndpointsSpec) starts a
+  // plain JDK server of its own: set it before any suite runs, as an
+  // embedder that starts its own server first must.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
   lazy val spark: SparkSession = TestSpark.spark
   def sfTiny: String = TestSpark.sfTiny
   def sfSmall: String = TestSpark.sfSmall

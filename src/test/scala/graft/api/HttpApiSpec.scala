@@ -1,8 +1,10 @@
 package graft.api
 
-import java.net.URI
+import java.io.{BufferedInputStream, ByteArrayOutputStream}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.graph.{CodeGraph, GraphStore, OpLog}
@@ -13,10 +15,8 @@ import graft.ingest.Ingestor
   * these via Flask — `api/index.py:41-51`). */
 class HttpApiSpec extends SparkSpec {
 
-  private lazy val store = {
-    val wh = Files.createTempDirectory("graft-http-wh").toString
-    val s = new GraphStore(spark, wh)
-    val g = new CodeGraph(spark, "proj", Some(s))
+  private def build(s: GraphStore, repo: String): Unit = {
+    val g = new CodeGraph(spark, repo, Some(s))
     Ingestor.ingest(g, Seq(Ingestor.SourceFile("src.py", Seq(
       "def alpha():",
       "    beta()",
@@ -24,6 +24,11 @@ class HttpApiSpec extends SparkSpec {
       "def beta():",
       "    pass").mkString("\n"))))
     g.checkpointNow(); g.save()
+  }
+
+  private lazy val store = {
+    val s = new GraphStore(spark, Files.createTempDirectory("graft-http-wh").toString)
+    build(s, "proj")
     s
   }
 
@@ -92,6 +97,106 @@ class HttpApiSpec extends SparkSpec {
       assert(sw.statusCode() == 401)
       assert(OpLog.mapper.readTree(sw.body()).get("message").asText()
         == "Unauthorized")
+    } finally api.stop()
+  }
+
+  /** One keep-alive connection with `TCP_NODELAY`, as an interactive client
+    * holds it: each request waits for the whole previous reply. */
+  private final class KeepAlive(port: Int) extends AutoCloseable {
+    private val sock = new Socket("127.0.0.1", port)
+    sock.setTcpNoDelay(true)
+    private val in = new BufferedInputStream(sock.getInputStream)
+    private val out = sock.getOutputStream
+
+    /** The status and the body bytes of one request. */
+    def send(method: String, path: String, body: String = ""): (Int, Array[Byte]) = {
+      val b = body.getBytes(UTF_8)
+      out.write((s"$method $path HTTP/1.1\r\nHost: localhost\r\n" +
+        s"Content-Length: ${b.length}\r\n\r\n").getBytes(US_ASCII) ++ b)
+      out.flush()
+      val status = line().split(' ')(1).toInt
+      val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).toList
+      val length = headers.collectFirst { case h if h.toLowerCase.startsWith("content-length:") =>
+        h.drop("content-length:".length).trim.toInt }.get
+      (status, in.readNBytes(length))
+    }
+
+    private def line(): String = {
+      val buf = new ByteArrayOutputStream()
+      var c = in.read()
+      while (c != '\n') {
+        assert(c >= 0, "connection closed by the server")
+        if (c != '\r') buf.write(c)
+        c = in.read()
+      }
+      buf.toString(US_ASCII)
+    }
+
+    def close(): Unit = sock.close()
+  }
+
+  test("small replies on a keep-alive connection leave without a delayed-ACK stall") {
+    System.clearProperty("sun.net.httpserver.nodelay")
+    val api = new HttpApi(spark, store, secretToken = None, publicAccess = false)
+    val port = api.start(0)
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    val conn = new KeepAlive(port)
+    try {
+      def complete(): Double = {
+        val t0 = System.nanoTime()
+        val (code, _) = conn.send("POST", "/auto_complete", """{"repo":"proj","prefix":"al"}""")
+        assert(code == 200)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 5).foreach(_ => complete())
+      // a reply written in two segments waits ~40 ms for the client's
+      // delayed ACK when Nagle's algorithm holds the second one back
+      val ms = (1 to 20).map(_ => complete()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, f"median $median%.1f ms over ${ms.mkString(", ")}")
+    } finally { conn.close(); api.stop() }
+  }
+
+  test("replies are the JSON text as UTF-8, supplementary characters included") {
+    val wh = Files.createTempDirectory("graft-http-utf8").toString
+    val s = new GraphStore(spark, wh)
+    val names = Seq("caf\u00e9", "\ud835\udc53x", "\ud83d\ude00", "\u65e5\u672c")
+    s.save("utf", ServingIndexSpec.graph(spark,
+      names.zipWithIndex.map { case (n, i) => (i.toLong, Seq("Function", "Searchable"), n) },
+      Seq((0L, 1L, "CALLS"), (1L, 2L, "CALLS"))))
+    val api = new HttpApi(spark, s, secretToken = None, publicAccess = false)
+    val conn = new KeepAlive(api.start(0))
+    try {
+      for ((method, path, body) <- Seq(("GET", "/graph_entities?repo=utf", ""),
+          ("GET", "/graph_entities?repo=utf", ""),
+          ("POST", "/auto_complete", """{"repo":"utf","prefix":"\ud835\udc53"}"""),
+          ("POST", "/auto_complete", """{"repo":"utf","prefix":""}"""))) {
+        val (code, bytes) = conn.send(method, path, body)
+        assert(code == 200)
+        val text = OpLog.mapper.writeValueAsString(OpLog.mapper.readTree(bytes))
+        assert(bytes.sameElements(text.getBytes(UTF_8)), new String(bytes, UTF_8))
+        assert(!new String(bytes, UTF_8).contains("\\u"), "escaped surrogates")
+      }
+      val (_, all) = conn.send("POST", "/auto_complete", """{"repo":"utf","prefix":""}""")
+      val got = OpLog.mapper.readTree(all).get("completions")
+      assert((0 until got.size()).map(got.get(_).get("properties").get("name").asText()) == names)
+    } finally { conn.close(); api.stop() }
+  }
+
+  test("a request whose endpoint throws gets a 500, and the server serves the next one") {
+    val wh = Files.createTempDirectory("graft-http-broken").toString
+    build(new GraphStore(spark, wh), "broken")
+    Files.write(Paths.get(wh, "broken", "info.json"), "{not json".getBytes(UTF_8))
+    val api = new HttpApi(spark, new GraphStore(spark, wh), secretToken = None,
+      publicAccess = false)
+    val port = api.start(0)
+    try {
+      val info = post(port, "/repo_info", """{"repo":"broken"}""")
+      assert(info.statusCode() == 500)
+      assert(OpLog.mapper.readTree(info.body()).get("status").asText()
+        == "Internal server error")
+      val repos = get(port, "/list_repos")
+      assert(repos.statusCode() == 200 && repos.body().contains("broken"))
     } finally api.stop()
   }
 

@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
-import graft.graph.{CodeGraph, GraphQueries, GraphStore}
+import graft.graph.{CodeGraph, GraphQueries, GraphStore, PropertyGraph}
 import graft.ingest.Ingestor
 
 /** The resident serving index ([[GraphStore.view]] of a repo within the
@@ -170,6 +172,15 @@ class ServingIndexSpec extends SparkSpec {
       .foreach(read => assert(read(api).json == read(dfApi).json))
     def has(repo: String, prefix: String): Boolean =
       api.autoComplete(Some(repo), Some(prefix)).body.get("completions").size() > 0
+    // an info write alone: repo_info shows it, and graph_entities still
+    // shows the graph on disk
+    var commits = 0
+    def commit(repo: String): Unit = {
+      commits += 1
+      indexed.setInfo(repo, Map("commit" -> s"c$commits"))
+      same(repo)
+      assert(api.repoInfo(Some(repo)).body.get("info").get("commit").asText() == s"c$commits")
+    }
 
     // analyze_folder twice on one folder name, the second time with a new module
     val dir = Files.createTempDirectory("graft-serve-src").resolve("work")
@@ -177,10 +188,12 @@ class ServingIndexSpec extends SparkSpec {
     assert(api.analyzeFolder(Some(dir.toString)).code == 200)
     same("work")
     assert(!has("work", "m02_"))
+    commit("work")
     write(dir, tree(3))
     assert(api.analyzeFolder(Some(dir.toString)).code == 200)
     same("work")
     assert(has("work", "m02_"))
+    commit("work")
 
     // delete, then the name again with another graph
     indexed.delete("work")
@@ -189,6 +202,7 @@ class ServingIndexSpec extends SparkSpec {
     build(indexed, "work", EndpointsSpec.fixture)
     same("work")
     assert(!has("work", "m") && has("work", "set"))
+    commit("work")
 
     // clone onto an existing, already served name
     build(indexed, "other", tree(2))
@@ -197,6 +211,98 @@ class ServingIndexSpec extends SparkSpec {
     indexed.cloneGraph("work", "other")
     same("other")
     assert(!has("other", "m") && has("other", "set"))
+    assert(api.repoInfo(Some("other")).body.get("info").get("commit").asText() == s"c$commits")
+    commit("other")
+  }
+
+  test("graph_entities is encoded once per resident index, and its reply goes with the index") {
+    val (indexed, df) = stores()
+    build(indexed, "r", tree(2))
+    val api = new Endpoints(spark, indexed, RuleChatClient)
+    val dfApi = new Endpoints(spark, df, RuleChatClient)
+    val first = api.graphEntities(Some("r")).bytes
+    val cached = api.graphEntities(Some("r")).bytes
+    assert(cached eq first, "the second read encodes again")
+    assert(first.sameElements(dfApi.graphEntities(Some("r")).bytes))
+    assert(api.cachedReplies == 1)
+    assert(dfApi.cachedReplies == 0, "a reply kept over the guard")
+
+    // a write drops the index; once it is collected, so is its reply
+    indexed.setInfo("r", Map("commit" -> "c1"))
+    assert(!(api.graphEntities(Some("r")).bytes eq first))
+    indexed.delete("r")
+    assert(api.graphEntities(Some("r")).status == "Missing project r")
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (api.cachedReplies > 0 && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(50)
+    }
+    assert(api.cachedReplies == 0)
+  }
+
+  test("a resident repo answers reads, repo_info included, without touching its files") {
+    val (indexed, _) = stores()
+    build(indexed, "r", tree(2))
+    indexed.setInfo("r", Map("commit" -> "c1"))
+    val api = new Endpoints(spark, indexed, RuleChatClient)
+    val before = Seq(api.graphEntities(Some("r")).json, api.repoInfo(Some("r")).json,
+      api.autoComplete(Some("r"), Some("m01")).json)
+    // removed behind the store's back (a write the store cannot see)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(indexed.warehouse, "r"))
+    assert(Seq(api.graphEntities(Some("r")).json, api.repoInfo(Some("r")).json,
+      api.autoComplete(Some("r"), Some("m01")).json) == before)
+    assert(!new GraphStore(spark, indexed.warehouse).exists("r"))
+  }
+
+  test("name order: completions and call neighbours agree with the DataFrame reads") {
+    // scan order lists the k-names backwards and puts a non-Searchable node
+    // of the same name after each one, so that name order and scan order
+    // disagree inside one prefix range of more than 10 matches
+    val ks = ('a' to 'o').map(c => s"k$c").reverse
+    val nodes = ks.flatMap(n => Seq((Seq("Function", "Searchable"), n), (Seq("Function"), n))) ++
+      Seq((Seq("Function", "Searchable"), "kqz"), (Seq("Class", "Searchable"), null)) ++
+      Seq("caf\u00e9", "cafe", "\ud835\udc53x", "\ud835\udc53", "\ud83d\ude00",
+        "\uff21", "\u65e5\u672c").map(n => (Seq("Function", "Searchable"), n)) ++
+      (0 until 100).map(i => (Seq("File", "Searchable"), f"x$i%03d")) ++
+      // three functions and a class named dup, each called and calling
+      Seq(Seq("Function"), Seq("Class"), Seq("Function"), Seq("Function"))
+        .map(l => (l :+ "Searchable", "dup")) ++
+      Seq("a0", "a1", "a2", "a3", "b0", "b1", "b2", "b3").map(n => (Seq("Function", "Searchable"), n))
+    val rows = nodes.zipWithIndex.map { case ((labels, name), i) => ((i + 1).toLong * 7, labels, name) }
+    val id = rows.collect { case (i, _, n) if n != null => n -> i }.groupBy(_._1)
+      .map { case (n, is) => n -> is.map(_._2) }
+    val dups = id("dup")
+    val edges = dups.indices.flatMap { k =>
+      Seq((id("a" + k).head, dups(k), "CALLS"), (dups(k), id("b" + k).head, "CALLS"))
+    } ++ Seq((id("a0").head, dups(2), "CALLS"), (dups(3), id("b0").head, "CALLS"))
+    val (indexed, df) = stores()
+    indexed.save("names", ServingIndexSpec.graph(spark, rows, edges))
+    val api = new Endpoints(spark, indexed, RuleChatClient)
+    val dfApi = new Endpoints(spark, df, RuleChatClient)
+    assert(indexed.servingIndex("names").isDefined && df.servingIndex("names").isEmpty)
+
+    def names(r: Endpoints#ApiResponse): Seq[String] =
+      r.body.get("completions").elements().asScala.map(_.get("properties").get("name").asText()).toSeq
+    for (p <- Seq("", "k", "x", "ko", "kq", "kk0", "zz", "dup", "caf", "caf\u00e9",
+        "\ud835\udc53", "\uff21", "\u65e5")) {
+      val got = api.autoComplete(Some("names"), Some(p))
+      assert(got.json == dfApi.autoComplete(Some("names"), Some(p)).json, s"prefix '$p'")
+    }
+    assert(names(api.autoComplete(Some("names"), Some("k"))) == ks.take(10))
+    assert(names(api.autoComplete(Some("names"), Some("kq"))) == Seq("kqz"))
+    assert(names(api.autoComplete(Some("names"), Some("\ud835\udc53"))) ==
+      Seq("\ud835\udc53x", "\ud835\udc53"))
+
+    val viaIndex = indexed.view("names")
+    val viaDf = df.view("names")
+    for (incoming <- Seq(true, false)) {
+      val got = viaIndex.callNeighbourNames("dup", incoming)
+      assert(got.sorted == viaDf.callNeighbourNames("dup", incoming).distinct.sorted)
+      // the functions' neighbours only, not the class's, in the scan order
+      // of the functions named dup, each name once
+      assert(got == (if (incoming) Seq("a0", "a2", "a3") else Seq("b0", "b2", "b3")))
+    }
+    for (q <- Seq("who calls dup?", "what does dup call?", "who calls ka?"))
+      assert(api.chatAsk(Some("names"), Some(q)).json == dfApi.chatAsk(Some("names"), Some(q)).json)
   }
 
   test("resident indexes keep within the bound together, least recently read dropped first") {
@@ -224,6 +330,16 @@ class ServingIndexSpec extends SparkSpec {
 
 object ServingIndexSpec {
   private val MarkerKey = "graft.test.marker"
+
+  /** A graph of the given (id, labels, name) nodes, each in `p.py`, and
+    * (src, dst, type) edges, stored as one file per table in the given
+    * order, which is then the scan order. */
+  def graph(spark: SparkSession, nodes: Seq[(Long, Seq[String], String)],
+      edges: Seq[(Long, Long, String)]): PropertyGraph = {
+    import spark.implicits._
+    PropertyGraph(nodes.toDF("id", "labels", "name").withColumn("path", lit("p.py")).coalesce(1),
+      edges.toDF("src", "dst", "type").coalesce(1))
+  }
 
   private def fn(module: Int, j: Int): String = f"m$module%02d_f$j%02d"
 
