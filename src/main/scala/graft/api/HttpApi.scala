@@ -50,9 +50,10 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
     * not be reachable off-host (the reference binds all interfaces,
     * `index.py`; pass bindHost = "0.0.0.0" to match it).
     *
-    * Sets `sun.net.httpserver.nodelay`, which the JDK reads once per JVM,
-    * when the first `com.sun.net.httpserver` server is created: an embedder
-    * that creates one before this call must set the property (or pass
+    * Sets `sun.net.httpserver.nodelay` unless it is already set (an
+    * explicit value is kept). The JDK reads it once per JVM, when the first
+    * `com.sun.net.httpserver` server is created: an embedder that creates
+    * one before this call must set the property (or pass
     * `-Dsun.net.httpserver.nodelay=true`) itself, or replies stall. */
   def start(bindPort: Int = 5000, bindHost: String = "127.0.0.1"): Int =
       synchronized {
@@ -61,7 +62,7 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
       org.slf4j.LoggerFactory.getLogger(classOf[HttpApi]).warn(
         "SECRET_TOKEN is not configured — the API accepts " +
           "Authorization-less requests (reference index.py:26-28 parity)")
-    System.setProperty(NoDelay, "true")
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     val s = HttpServer.create(new InetSocketAddress(bindHost, bindPort), 0)
     s.createContext("/", handle _)
     s.setExecutor(null) // serial dispatch — single-writer mutation discipline
@@ -84,7 +85,11 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
     try os.write(bytes) finally os.close()
   }
 
-  private def unauthorized(ex: HttpExchange): Unit = write(ex, 401, Unauthorized)
+  private def write(ex: HttpExchange, code: Int, body: String): Unit =
+    write(ex, code, body.getBytes(StandardCharsets.UTF_8))
+
+  private def unauthorized(ex: HttpExchange): Unit =
+    write(ex, 401, """{"message":"Unauthorized"}""")
 
   private def tokenOk(ex: HttpExchange): Boolean = {
     val header = Option(ex.getRequestHeaders.getFirst("Authorization"))
@@ -195,14 +200,16 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
       }
       resp match {
         case Some(r) => write(ex, r.code, r.bytes)
-        case None => write(ex, 404, NotFound)
+        case None => write(ex, 404, """{"status":"Not found"}""")
       }
     } catch {
       case _: BadRequest =>
-        try write(ex, 400, BadRequestReply) catch { case NonFatal(_) => () }
+        try write(ex, 400, """{"status":"Bad request"}""")
+        catch { case NonFatal(_) => () }
       case NonFatal(e) =>
         // mirror the reference's per-endpoint catch (`index.py:90-94`)
-        try write(ex, 500, InternalError) catch { case NonFatal(_) => () }
+        try write(ex, 500, """{"status":"Internal server error"}""")
+        catch { case NonFatal(_) => () }
         org.slf4j.LoggerFactory.getLogger(classOf[HttpApi]).warn(
           s"request failed: ${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
     } finally ex.close()
@@ -214,10 +221,4 @@ object HttpApi {
 
   /** Routes that also need public access (`index.py:44-50`). */
   private val PublicOnly = Set("/analyze_repo", "/switch_commit", "/list_commits")
-
-  private def reply(json: String) = json.getBytes(StandardCharsets.UTF_8)
-  private val Unauthorized = reply("""{"message":"Unauthorized"}""")
-  private val NotFound = reply("""{"status":"Not found"}""")
-  private val BadRequestReply = reply("""{"status":"Bad request"}""")
-  private val InternalError = reply("""{"status":"Internal server error"}""")
 }

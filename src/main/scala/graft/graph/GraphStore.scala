@@ -69,11 +69,13 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     * replayed op-log whose captured edges reference the originals would
     * silently mis-wire (op-log capture/replay divergence). */
   def load(name: String): PropertyGraph =
-    if (!exists(name)) GraphSchema.empty(spark)
-    else PropertyGraph(
+    if (!exists(name)) GraphSchema.empty(spark) else snapshot(name, getInfo(name))
+
+  private def snapshot(name: String, info: Map[String, String]): PropertyGraph =
+    PropertyGraph(
       spark.read.schema(GraphSchema.nodeSchema).parquet(nodesDir(name).toString),
       spark.read.schema(GraphSchema.edgeSchema).parquet(edgesDir(name).toString),
-      nextIdHint = getInfo(name).get(GraphStore.NextIdKey).map(_.toLong))
+      nextIdHint = info.get(GraphStore.NextIdKey).map(_.toLong))
 
   // ---- resident serving index --------------------------------------------
 
@@ -84,11 +86,12 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     * DataFrame path (-1 admits no repo) or force evictions. */
   @volatile private[graft] var servingLimit: Long = Paths.EdgeBroadcastLimit
 
-  // per repo, least recently read first: the index of its current version,
-  // or None when it is over the bound
-  private val served = mutable.LinkedHashMap.empty[String, Option[ServingIndex]]
-  // per repo with a resident index, its info hash as last read
-  private val infos = mutable.HashMap.empty[String, Map[String, String]]
+  // a repo's resident index with the info hash read alongside it
+  private final case class Resident(index: ServingIndex, info: Map[String, String])
+
+  // per repo, least recently read first: its current version, or None when
+  // it is over the bound
+  private val served = mutable.LinkedHashMap.empty[String, Option[Resident]]
   private var writes = 0L
 
   /** The resident index of `name`'s current version, built on the first call
@@ -104,22 +107,24 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       if (!exists(name)) None
       else {
         val fits = Seq(nodesDir(name), edgesDir(name)).forall(tableRows(_) <= servingLimit)
-        val built = if (fits) Some(ServingIndex.build(load(name))) else None
+        val built = if (fits) {
+          val info = readInfo(name)
+          Some(Resident(ServingIndex.build(snapshot(name, info)), info))
+        } else None
         // a write that finished during the build may have made it stale
         synchronized { if (writes == seen) { served(name) = built; evict() } }
         built
       }
-    }
+    }.map(_.index)
   }
 
   /** Drops the least recently read indexes, never the latest, until the
     * resident ones hold at most [[servingLimit]] rows per table together. */
   private def evict(): Unit = {
-    var resident = served.toList.collect { case (n, Some(ix)) => (n, ix) }
+    var resident = served.toList.collect { case (n, Some(r)) => (n, r.index) }
     def over(rows: ServingIndex => Long) = resident.iterator.map(r => rows(r._2)).sum > servingLimit
     while (resident.size > 1 && (over(_.nodeCount) || over(_.edgeCount))) {
       served -= resident.head._1
-      infos -= resident.head._1
       resident = resident.tail
     }
   }
@@ -151,7 +156,7 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     servingIndex(name).getOrElse(new SnapshotReader(load(name)))
 
   private def written[T](name: String)(write: => T): T =
-    try write finally synchronized { served -= name; infos -= name; writes += 1 }
+    try write finally synchronized { served -= name; writes += 1 }
 
   /** Persist a snapshot with stage-then-swap (atomic per table).
     *
@@ -232,19 +237,10 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The info hash: for a repo with a resident index, read from its file on
-    * the first call after a write. */
-  def getInfo(name: String): Map[String, String] = {
-    val (known, seen) = synchronized((infos.get(name), writes))
-    known.getOrElse {
-      val read = readInfo(name)
-      // a write that finished during the read may have made it stale
-      synchronized {
-        if (writes == seen && served.get(name).exists(_.isDefined)) infos(name) = read
-      }
-      read
-    }
-  }
+  /** The info hash: a repo with a resident index answers the hash read
+    * with it. */
+  def getInfo(name: String): Map[String, String] =
+    synchronized(served.get(name).flatten).map(_.info).getOrElse(readInfo(name))
 
   private def readInfo(name: String): Map[String, String] = {
     if (!fs.exists(infoFile(name))) return Map.empty

@@ -176,17 +176,9 @@ final class ServingIndex private (
   /** `auto_complete`: the first `limit` Searchable nodes in scan order whose
     * name starts with `prefix` ([[GraphQueries.autoComplete]]). */
   def autoComplete(prefix: String, limit: Int = 10): IndexedSeq[Row] = {
-    def searchable(v: Int) = hasLabel(v, GraphSchema.SEARCHABLE)
     val (lo, hi) = nameRange(prefix, exact = false)
-    val rows =
-      // a wide range (a short prefix) is cheaper to meet in scan order,
-      // where the first `limit` hits end the walk
-      if ((hi - lo).toLong * (hi - lo) > limit.toLong * ids.length)
-        ids.indices.iterator.filter { v =>
-          nodeNames(v) != null && nameOf(v).startsWith(prefix) && searchable(v)
-        }
-      else byName.slice(lo, hi).filter(searchable).sorted.iterator
-    rows.take(limit).map(nodeRow).toIndexedSeq
+    byName.slice(lo, hi).filter(hasLabel(_, GraphSchema.SEARCHABLE)).sorted
+      .take(limit).map(nodeRow).toIndexedSeq
   }
 
   /** `find_paths`: the paths of [[pathIds]], each CALLS hop encoded as the

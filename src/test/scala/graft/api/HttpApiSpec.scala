@@ -155,6 +155,13 @@ class HttpApiSpec extends SparkSpec {
       val median = (ms(9) + ms(10)) / 2
       assert(median < 20.0, f"median $median%.1f ms over ${ms.mkString(", ")}")
     } finally { conn.close(); api.stop() }
+    // an explicit setting is the embedder's and is kept
+    System.setProperty("sun.net.httpserver.nodelay", "false")
+    val kept = new HttpApi(spark, store, secretToken = None, publicAccess = false)
+    try {
+      kept.start(0)
+      assert(System.getProperty("sun.net.httpserver.nodelay") == "false")
+    } finally { kept.stop(); System.setProperty("sun.net.httpserver.nodelay", "true") }
   }
 
   test("replies are the JSON text as UTF-8, supplementary characters included") {
@@ -186,7 +193,12 @@ class HttpApiSpec extends SparkSpec {
   test("a request whose endpoint throws gets a 500, and the server serves the next one") {
     val wh = Files.createTempDirectory("graft-http-broken").toString
     build(new GraphStore(spark, wh), "broken")
+    // written past the store: drop the checksum sidecar too, so that the
+    // read fails on the JSON itself and not on the stale checksum
     Files.write(Paths.get(wh, "broken", "info.json"), "{not json".getBytes(UTF_8))
+    Files.delete(Paths.get(wh, "broken", ".info.json.crc"))
+    intercept[com.fasterxml.jackson.core.JsonParseException](
+      new GraphStore(spark, wh).getInfo("broken"))
     val api = new HttpApi(spark, new GraphStore(spark, wh), secretToken = None,
       publicAccess = false)
     val port = api.start(0)
