@@ -28,9 +28,13 @@ import graft.graph.{GraphStore, OpLog}
   * production deployment would put this on a long-lived SparkSession the
   * same way the reference holds a FalkorDB connection pool.
   *
-  * Replies leave with `TCP_NODELAY` ([[start]]): most are written in more
-  * than one segment, and without it the last segment waits for the
-  * client's delayed ACK, about 40 ms per request on Linux.
+  * Replies leave with the JDK server's default socket options: most are
+  * written in more than one segment, and without `TCP_NODELAY` the last
+  * segment waits for the client's delayed ACK, about 40 ms per request on
+  * Linux. A deployment that wants replies at transport speed starts the
+  * JVM with `-Dsun.net.httpserver.nodelay=true` (README "Reads at
+  * transport speed"); the JDK reads it once per JVM, when the first
+  * `com.sun.net.httpserver` server is created.
   */
 final class HttpApi(spark: SparkSession, store: GraphStore,
     chat: ChatClient = RuleChatClient,
@@ -48,13 +52,7 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
 
   /** Binds loopback by default — a fresh deployment without a token should
     * not be reachable off-host (the reference binds all interfaces,
-    * `index.py`; pass bindHost = "0.0.0.0" to match it).
-    *
-    * Sets `sun.net.httpserver.nodelay` unless it is already set (an
-    * explicit value is kept). The JDK reads it once per JVM, when the first
-    * `com.sun.net.httpserver` server is created: an embedder that creates
-    * one before this call must set the property (or pass
-    * `-Dsun.net.httpserver.nodelay=true`) itself, or replies stall. */
+    * `index.py`; pass bindHost = "0.0.0.0" to match it). */
   def start(bindPort: Int = 5000, bindHost: String = "127.0.0.1"): Int =
       synchronized {
     require(server.isEmpty, "already started")
@@ -62,7 +60,6 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
       org.slf4j.LoggerFactory.getLogger(classOf[HttpApi]).warn(
         "SECRET_TOKEN is not configured — the API accepts " +
           "Authorization-less requests (reference index.py:26-28 parity)")
-    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     val s = HttpServer.create(new InetSocketAddress(bindHost, bindPort), 0)
     s.createContext("/", handle _)
     s.setExecutor(null) // serial dispatch — single-writer mutation discipline
@@ -217,8 +214,6 @@ final class HttpApi(spark: SparkSession, store: GraphStore,
 }
 
 object HttpApi {
-  private val NoDelay = "sun.net.httpserver.nodelay"
-
   /** Routes that also need public access (`index.py:44-50`). */
   private val PublicOnly = Set("/analyze_repo", "/switch_commit", "/list_commits")
 }

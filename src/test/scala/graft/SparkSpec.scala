@@ -27,11 +27,11 @@ object TestSpark {
 }
 
 abstract class SparkSpec extends AnyFunSuite {
-  // HttpApi turns on TCP_NODELAY through this property, which the JDK reads
-  // once per JVM, when the first com.sun.net.httpserver server is created.
-  // Suites share one forked JVM, and one of them (EndpointsSpec) starts a
-  // plain JDK server of its own: set it before any suite runs, as an
-  // embedder that starts its own server first must.
+  // Replies leave with TCP_NODELAY when this property is set, as a
+  // deployment sets it with -Dsun.net.httpserver.nodelay=true. The JDK reads
+  // it once per JVM, when the first com.sun.net.httpserver server is
+  // created; suites share one forked JVM, and one of them (EndpointsSpec)
+  // starts a plain JDK server of its own: set it before any suite runs.
   System.setProperty("sun.net.httpserver.nodelay", "true")
 
   lazy val spark: SparkSession = TestSpark.spark
