@@ -252,15 +252,13 @@ final class Endpoints(spark: SparkSession, store: GraphStore,
         err("Invalid path: must be an existing directory")
       case Some(p) =>
         val projName = new java.io.File(p).getName
-        val g = new CodeGraph(spark, projName, Some(store))
         val sources = GitHistory.readSources(p)
           .filterNot(s => ignore.getOrElse(Nil).exists(s.path.startsWith))
         // analyzer dependency pass (F9): dotnet-restore side effect + pip/
         // Maven dependency sources, idempotent against the walk above
-        graft.ingest.Ingestor.ingest(g, sources ++
+        graft.ingest.Ingestor.analyze(spark, store, projName, sources ++
           graft.ingest.DependencyExpansion.expandAll(
             java.nio.file.Paths.get(p), sources))
-        g.checkpointNow(); g.save()
         resp(200, "status" -> "success", "project" -> projName)
     }
   }

@@ -80,15 +80,11 @@ object GitHistory {
     * into graph `repoName`, record the HEAD hash in the repo info
     * (`api/info.py` `set_repo_commit`). */
   def analyzeRepo(spark: SparkSession, store: GraphStore, repoDir: String,
-      repoName: String): CodeGraph = {
-    val g = new CodeGraph(spark, repoName, Some(store))
+      repoName: String): Unit = {
     val sources = readSources(repoDir)
-    Ingestor.ingest(g, sources ++ DependencyExpansion.expandAll(
-      JPaths.get(repoDir), sources))
-    g.checkpointNow()
-    g.save()
+    Ingestor.analyze(spark, store, repoName, sources ++
+      DependencyExpansion.expandAll(JPaths.get(repoDir), sources))
     store.setInfo(repoName, Map("commit" -> GitCli.headCommit(repoDir).hash))
-    g
   }
 
   /** Apply one commit-step's changes to the (backlogged) temp graph:

@@ -2,7 +2,7 @@ package graft.graph
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{SaveMode, SparkSession}
@@ -181,8 +181,11 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       .repartition(col("type"))
       // the writer REQUIRES an ordering prefixed by the partition columns;
       // sorting by (type, src) satisfies it, so no extra writer-inserted
-      // sort can destroy the src order that row-group pruning relies on
-      .sortWithinPartitions(col("type"), col("src"))
+      // sort can destroy the src order that row-group pruning relies on;
+      // (dst, line) make the order total, so the stored edge order, which
+      // `graph_entities` and `get_neighbors` reply in, does not depend on
+      // how the frame being saved was partitioned
+      .sortWithinPartitions(col("type"), col("src"), col("dst"), col("line"))
       .write.partitionBy("type")
       .mode(SaveMode.Overwrite).parquet(stagedEdges.toString)
     // checked aside-swap per table (the util.StageSwap posture): Hadoop
@@ -228,13 +231,29 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   /** C7: drop a graph (`api/graph.py:86-90`). */
   def delete(name: String): Unit = written(name) { fs.delete(repoDir(name), true); () }
 
+  /** The filesystem `info.json` is read and written through: the raw one
+    * under a checksummed filesystem, so the file has no `.crc` sidecar and
+    * an edit made by anything else (an operator, a restore that skips
+    * hidden files) reads as written. The cached filesystem itself keeps its
+    * checksum settings, which Spark's parquet writes share. */
+  private def infoFs: FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   /** `{name}_info` hash: `commit` / `repo_url` (`api/info.py:32-88`). */
   def setInfo(name: String, kv: Map[String, String]): Unit = written(name) {
     val merged = getInfo(name) ++ kv
     val json = OpLog.mapper.writeValueAsString(merged)
     fs.mkdirs(repoDir(name))
-    val out = fs.create(infoFile(name), true)
+    val out = infoFs.create(infoFile(name), true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
+    // a sidecar left by a checksummed write (an older store, a clone) no
+    // longer describes the file
+    fs match {
+      case c: ChecksumFileSystem => infoFs.delete(c.getChecksumFile(infoFile(name)), false)
+      case _ =>
+    }
   }
 
   /** The info hash: a repo with a resident index answers the hash read
@@ -243,8 +262,8 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     synchronized(served.get(name).flatten).map(_.info).getOrElse(readInfo(name))
 
   private def readInfo(name: String): Map[String, String] = {
-    if (!fs.exists(infoFile(name))) return Map.empty
-    val in = fs.open(infoFile(name))
+    if (!infoFs.exists(infoFile(name))) return Map.empty
+    val in = infoFs.open(infoFile(name))
     try {
       val bytes = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)

@@ -1,10 +1,10 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.graph.{CodeGraph, GraphQueries}
+import graft.graph.{CodeGraph, GraphQueries, GraphStore}
 
 /** Two-pass repo ingestion (SURVEY §3.1 Spark trace):
   *
@@ -21,8 +21,13 @@ import graft.graph.{CodeGraph, GraphQueries}
   *      fixture graph — FIXTURES.md §1.1).
   *
   * Scale: extraction is embarrassingly parallel over files; every join is
-  * keyed on (name) or (path, idx); the only driver actions are the batch
-  * mutation counters.
+  * keyed on (name) or (path, idx). The batches are not cheap in jobs: ID
+  * assignment and the lineage cuts run eagerly, so a fresh 100-file ingest
+  * runs 56 Spark jobs (then 17 in `checkpointNow` and 3 in `save`), almost
+  * all of it per-job cold overhead. [[analyze]] therefore builds a fresh
+  * graph within the serving guard on the driver ([[LocalIngest]], the
+  * same rows and IDs), and this path serves re-analysis, history walks,
+  * streaming and input over the guard.
   */
 object Ingestor {
 
@@ -35,6 +40,31 @@ object Ingestor {
     * reference's own `tests/source_files/c/src.c`). */
   val frontends: Seq[LanguageFrontend] =
     Seq(PythonFrontend, JavaFrontend, CSharpFrontend, CFrontend, JsonlFrontend)
+
+  /** `source` through the frontend of `path`'s extension, keyed by the
+    * logical path the graph stores; None for an unsupported file. */
+  def extract(path: String, source: String): Option[(String, FileExtraction)] = {
+    val ext = splitPath(path)._3
+    frontends.find(_.extensions.contains(ext)).map { fe =>
+      val logical = if (fe == JsonlFrontend) JsonlFrontend.logicalPath(path) else path
+      (logical, fe.extract(path, source))
+    }
+  }
+
+  /** Edge type of each typed reference kind
+    * (`api/analyzers/source_analyzer.py:158-169`). */
+  val relOfKind: Map[String, String] = Map(
+    "base_class" -> "EXTENDS", "extend_interface" -> "EXTENDS",
+    "implement_interface" -> "IMPLEMENTS",
+    "return_type" -> "RETURNS", "parameters" -> "PARAMETERS")
+
+  /** The dotted module an import binds its alias to: the module itself for
+    * a whole-module import (`import numpy as np`), module.symbol for a
+    * member (`import a.b.C`). */
+  def qualModule(module: String, symbol: String): String =
+    if (symbol == "") module else if (module == "") symbol else s"$module.$symbol"
+
+  private val rankUdf = udf(Resolution.rank _)
 
   def splitPath(p: String): (String, String, String) = {
     val slash = p.lastIndexOf('/')
@@ -53,6 +83,22 @@ object Ingestor {
     lazy val nEdges: Long = edges
   }
 
+  /** `analyze_folder`'s and `analyze_repo`'s write of graph `name`. A graph
+    * the store does not hold yet, whose extraction stays within the store's
+    * serving guard ([[GraphStore.servingLimit]]), is built on the driver
+    * ([[LocalIngest]]) and written in one [[GraphStore.save]]; any other
+    * input goes through [[ingest]] and the mutation batches. */
+  def analyze(spark: SparkSession, store: GraphStore, name: String,
+      sources: Seq[SourceFile]): Unit =
+    (if (store.exists(name)) None
+     else LocalIngest.build(spark, sources, store.servingLimit)) match {
+      case Some(local) => store.save(name, local)
+      case None =>
+        val g = new CodeGraph(spark, name, Some(store))
+        ingest(g, sources)
+        g.checkpointNow(); g.save()
+    }
+
   def ingest(g: CodeGraph, files: Seq[SourceFile]): IngestReport = {
     val spark = g.spark
     import spark.implicits._
@@ -64,17 +110,10 @@ object Ingestor {
     val spark = g.spark
     import spark.implicits._
     val preNodes = g.graph.nodes // resolution targets already in the graph
-    val fes = frontends // serializable objects captured for executors
 
     // ---- first pass: parallel extraction ---------------------------------
     val extracted = filesDf.as[(String, String)].mapPartitions { it =>
-      it.flatMap { case (path, source) =>
-        val ext = splitPath(path)._3
-        fes.find(_.extensions.contains(ext)).map { fe =>
-          val logical = if (fe == JsonlFrontend) JsonlFrontend.logicalPath(path) else path
-          (logical, fe.extract(path, source))
-        }
-      }
+      it.flatMap { case (path, source) => extract(path, source) }
     }.cache()
 
     val entitiesRaw = extracted.flatMap { case (path, fx) =>
@@ -115,10 +154,7 @@ object Ingestor {
     // module the receiver actually names
     val qualImportsRaw = importsLast.select($"fpath".as("qfpath"),
       $"alias".as("qalias"),
-      when($"import_symbol" === "", $"import_module")
-        .when($"import_module" === "", $"import_symbol")
-        .otherwise(concat_ws(".", $"import_module", $"import_symbol"))
-        .as("qual_module"))
+      udf(qualModule _).apply($"import_module", $"import_symbol").as("qual_module"))
 
     // files
     val fileBatch = extracted.map(_._1).distinct().map { p =>
@@ -219,103 +255,25 @@ object Ingestor {
             .otherwise(lit("")))))
       .drop("qfpath", "qalias", "qual_module", "qual_head")
 
-    val candidates = srcSide.join(declared,
-      $"eff_name" === $"target_name", "left")
-    // Overload/import-aware ranking — the cheap 80% of what the reference
-    // gets from LSP `request_definition` (`api/analyzers/source_analyzer
-    // .py:118-169`), as pure sort keys on the name-join candidates:
-    //   1. same-file declarations win outright (unchanged);
-    //   2. IMPORTS: a candidate whose module matches what the calling
-    //      file actually imported the name from outranks everything
-    //      cross-file — `from a.m1 import f` makes `a/m1.py`'s f win
-    //      regardless of arity or directory distance;
-    //   3. real definitions beat builtin stubs (path "" marks a stub);
-    //   4. ARITY: among same-name callables, a call-site argument count
-    //      INSIDE the declared [required, total] range is an exact match
-    //      (defaults and varargs are optional — `f(1)` fits
-    //      `def f(a, b=2)`); outside it, distance to the nearer bound,
-    //      capped at 9; -1 (unknown, e.g. multi-line signatures or
-    //      pre-existing graph nodes) ranks as a neutral distance of 1;
-    //   5. PATH PROXIMITY: longest shared leading directory prefix with
-    //      the referencing file — `a/b/x.py` calling `f` prefers
-    //      `a/b/util.py` over `z/util.py` (import-locality heuristic);
-    //   6. stable (path, id) order.
-    val minEff = when($"target_min_arity" >= 0, $"target_min_arity")
-      .otherwise($"target_arity")
-    val arityDist = when($"nargs" < 0 || $"target_arity" < 0, lit(1))
-      .otherwise(when($"nargs" >= minEff && $"nargs" <= $"target_arity", lit(0))
-        .otherwise(least(
-          least(abs($"target_arity" - $"nargs"), abs(minEff - $"nargs")),
-          lit(9))))
-    // dotted module of the candidate's file (path minus extension); an
-    // import matches if it names that module directly (Python: module is
-    // the file) or module.symbol does (Java/C#: symbol is the type in a
-    // package) — as an exact or dot-boundary suffix match
-    val targetModule =
-      translate(regexp_replace($"target_path", "\\.[^./]+$", ""), "/", ".")
-    val importMatch = when(
-      $"import_module".isNotNull && $"import_module" =!= "" &&
-        $"target_path".isNotNull && (
-        targetModule === $"import_module" ||
-        targetModule.endsWith(concat(lit("."), $"import_module")) ||
-        targetModule === concat_ws(".", $"import_module", $"import_symbol") ||
-        targetModule.endsWith(concat(lit("."),
-          concat_ws(".", $"import_module", $"import_symbol")))),
-      lit(0)).when(
-      // qualified call whose receiver resolved through an import alias:
-      // the candidate must live in (or under) the module the receiver
-      // names — `np.array()` with `import numpy as np` prefers a
-      // definition in numpy.py / numpy/* over any closer bare `array`
-      $"eff_qual_module".isNotNull && $"target_path".isNotNull && (
-        targetModule === $"eff_qual_module" ||
-        targetModule.endsWith(concat(lit("."), $"eff_qual_module")) ||
-        targetModule.startsWith(concat($"eff_qual_module", lit("."))) ||
-        targetModule.contains(concat(lit("."), $"eff_qual_module", lit(".")))),
-      lit(0)).otherwise(lit(1))
-    val srcDirs = expr(
-      "slice(split(fpath, '/'), 1, greatest(size(split(fpath, '/')) - 1, 0))")
-    val tgtDirs = expr(
-      "slice(split(target_path, '/'), 1, greatest(size(split(target_path, '/')) - 1, 0))")
-    val sharedPrefix = expr(
-      """aggregate(
-        |  zip_with(src_dirs, tgt_dirs, (a, b) -> a IS NOT NULL AND a <=> b),
-        |  named_struct('n', 0, 'stop', false),
-        |  (acc, x) -> IF(acc.stop OR NOT x,
-        |    named_struct('n', acc.n, 'stop', true),
-        |    named_struct('n', acc.n + 1, 'stop', false)),
-        |  acc -> acc.n)""".stripMargin)
-    // member resolution: a `self.m()` / `this.m()` call (or a bare call in
-    // Java/C#, whose scoping DOES search the enclosing class) prefers the
-    // method declared in the caller's OWN class over a same-file same-name
-    // method of another class. Python bare calls are excluded — class
-    // scope is not on their resolution path.
-    val sameClass = when(
-      coalesce($"src_parent_idx", lit(-1)) >= 0 &&
-        $"target_path" === $"fpath" &&
-        $"target_parent_idx" === $"src_parent_idx" &&
-        ($"qualifier".isin("self", "this") ||
-          ($"qualifier" === "" &&
-            ($"fpath".endsWith(".java") || $"fpath".endsWith(".cs")))),
-      lit(0)).otherwise(lit(1))
+    // every candidate of a reference ranked by the shared rule
+    // ([[Resolution.rank]]); the first in each reference's window wins
+    val candidate = struct($"fpath", $"qualifier", $"nargs",
+      coalesce($"src_parent_idx", lit(-1)).as("srcParentIdx"),
+      $"import_module".as("importModule"), $"import_symbol".as("importSymbol"),
+      $"eff_qual_module".as("effQualModule"),
+      when($"target_id".isNotNull, struct($"target_id".as("id"),
+        $"target_path".as("path"), $"target_arity".as("arity"),
+        $"target_min_arity".as("minArity"),
+        $"target_parent_idx".as("parentIdx"))).as("target"))
     val w = Window.partitionBy($"fpath", $"fromIdx", $"kind", $"name",
         $"line", $"qualifier")
-      .orderBy(when($"target_path" === $"fpath", 0).otherwise(1),
-        sameClass.asc,
-        $"import_match".asc,
-        when($"target_path" === "", 1).otherwise(0),
-        $"arity_dist".asc,
-        $"shared_prefix".desc,
-        $"target_path".asc_nulls_last, $"target_id".asc_nulls_last)
-    val resolved = candidates
-      .withColumn("arity_dist", arityDist)
-      .withColumn("import_match", importMatch)
-      .withColumn("src_dirs", srcDirs)
-      .withColumn("tgt_dirs", tgtDirs)
-      .withColumn("shared_prefix", coalesce(sharedPrefix, lit(0)))
+      .orderBy(Encoders.product[Resolution.Rank].schema.fieldNames
+        .map(f => $"rank".getField(f).asc_nulls_last).toIndexedSeq: _*)
+    val resolved = srcSide.join(declared, $"eff_name" === $"target_name", "left")
+      .withColumn("rank", rankUdf(candidate))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" === 1)
-      .drop("rk", "arity_dist", "import_match", "src_dirs", "tgt_dirs",
-        "shared_prefix", "eff_name", "import_module", "import_symbol",
+      .drop("rk", "rank", "eff_name", "import_module", "import_symbol",
         "eff_qual_module", "src_parent_idx", "target_parent_idx")
       .localCheckpoint(true)
 
@@ -342,10 +300,7 @@ object Ingestor {
     // typed relation edges (api/analyzers/source_analyzer.py:158-169) —
     // ONE batch for all kinds (a per-kind loop costs an isEmpty job plus a
     // mutation round per relation type)
-    val kindToRel = typedLit(Map(
-      "base_class" -> "EXTENDS", "extend_interface" -> "EXTENDS",
-      "implement_interface" -> "IMPLEMENTS",
-      "return_type" -> "RETURNS", "parameters" -> "PARAMETERS"))
+    val kindToRel = typedLit(relOfKind)
     // C# base-list correction (`api/analyzers/csharp/analyzer.py:80-88`
     // NOTE + `tests/test_csharp_analyzer.py:66-69`): syntactically the first
     // base is tagged base_class, but when it RESOLVES to an Interface the

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,4 +41,26 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfTiny: String = TestSpark.sfTiny
   def sfSmall: String = TestSpark.sfSmall
+
+  /** Spark jobs started while `f` ran: a marker job closes the window, and
+    * the listener bus delivers events in order. */
+  def sparkJobs(f: => Unit): Int = {
+    val seen = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val markerKey = "graft.test.marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerKey) != null)) marker.countDown()
+        else if (marker.getCount > 0) { seen.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setLocalProperty(markerKey, "1")
+      try spark.range(1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(marker.await(60, TimeUnit.SECONDS))
+      seen.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -187,10 +187,7 @@ class HttpApiSpec extends SparkSpec {
   test("a request whose endpoint throws gets a 500, and the server serves the next one") {
     val wh = Files.createTempDirectory("graft-http-broken").toString
     build(new GraphStore(spark, wh), "broken")
-    // written past the store: drop the checksum sidecar too, so that the
-    // read fails on the JSON itself and not on the stale checksum
     Files.write(Paths.get(wh, "broken", "info.json"), "{not json".getBytes(UTF_8))
-    Files.delete(Paths.get(wh, "broken", ".info.json.crc"))
     intercept[com.fasterxml.jackson.core.JsonParseException](
       new GraphStore(spark, wh).getInfo("broken"))
     val api = new HttpApi(spark, new GraphStore(spark, wh), secretToken = None,
@@ -204,6 +201,35 @@ class HttpApiSpec extends SparkSpec {
       val repos = get(port, "/list_repos")
       assert(repos.statusCode() == 200 && repos.body().contains("broken"))
     } finally api.stop()
+  }
+
+  test("an info.json rewritten past the store reads as written, its stale checksum left or not") {
+    val wh = Files.createTempDirectory("graft-http-info").toString
+    build(new GraphStore(spark, wh), "edited")
+    // a checksummed write, as earlier stores made, leaves a .crc sidecar
+    val info = new org.apache.hadoop.fs.Path(wh, "edited/info.json")
+    val fs = info.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(info, true)
+    try out.write("""{"commit":"old"}""".getBytes(UTF_8)) finally out.close()
+    val crc = Paths.get(wh, "edited", ".info.json.crc")
+    assert(Files.exists(crc))
+    Files.write(Paths.get(wh, "edited", "info.json"),
+      """{"commit":"edited by hand"}""".getBytes(UTF_8))
+    val store = new GraphStore(spark, wh)
+    val api = new HttpApi(spark, store, secretToken = None, publicAccess = false)
+    val port = api.start(0)
+    try {
+      val res = post(port, "/repo_info", """{"repo":"edited"}""")
+      assert(res.statusCode() == 200, res.body())
+      assert(OpLog.mapper.readTree(res.body()).get("info").get("commit").asText()
+        == "edited by hand")
+      // the graph's reads, which load next_id from the file, answer too
+      assert(get(port, "/graph_entities?repo=edited").statusCode() == 200)
+    } finally api.stop()
+    // the next store write drops the stale sidecar
+    store.setInfo("edited", Map("commit" -> "new"))
+    assert(!Files.exists(crc))
+    assert(new GraphStore(spark, wh).getInfo("edited")("commit") == "new")
   }
 
   test("token guard: mismatch and missing token are rejected (index.py:26-38)") {

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 
@@ -40,27 +39,6 @@ class ServingIndexSpec extends SparkSpec {
   private def ids(store: GraphStore, repo: String): Map[String, Long] =
     store.load(repo).nodes.select("name", "id").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** Spark jobs started while `f` ran: a marker job closes the window, and
-    * the listener bus delivers events in order. */
-  private def jobsDuring(f: => Unit): Int = {
-    val seen = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(MarkerKey) != null)) marker.countDown()
-        else if (marker.getCount > 0) { seen.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setLocalProperty(MarkerKey, "1")
-      try spark.range(1).count() finally sc.setLocalProperty(MarkerKey, null)
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      seen.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Every read endpoint on `repo`, as the JSON to compare: exact where the
     * DataFrame read's order is fixed by its plan (scans, limits), sorted
@@ -98,7 +76,7 @@ class ServingIndexSpec extends SparkSpec {
     val viaDf = reads(new Endpoints(spark, df, RuleChatClient), repo,
       prefixes, neighbours, pairs, questions)
     var viaIndex = Seq.empty[(String, Seq[String])]
-    val jobs = jobsDuring {
+    val jobs = sparkJobs {
       viaIndex = reads(new Endpoints(spark, indexed, RuleChatClient), repo,
         prefixes, neighbours, pairs, questions)
     }
@@ -329,7 +307,6 @@ class ServingIndexSpec extends SparkSpec {
 }
 
 object ServingIndexSpec {
-  private val MarkerKey = "graft.test.marker"
 
   /** A graph of the given (id, labels, name) nodes, each in `p.py`, and
     * (src, dst, type) edges, stored as one file per table in the given

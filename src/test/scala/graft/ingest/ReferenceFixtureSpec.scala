@@ -150,4 +150,12 @@ class ReferenceFixtureSpec extends SparkSpec {
       .head().getAs[scala.collection.Seq[String]]("callers")
     assert(callers.toSet === Set("add", "main"))
   }
+
+  test("reference fixtures: the driver and the Spark analyze store the same graph") {
+    val fixtures = Seq("py/src.py", "csharp/Program.cs", "java/Task.java", "c/src.c")
+      .flatMap(rel => readFixture(rel).map(Ingestor.SourceFile(rel.split('/').last, _)))
+    if (fixtures.isEmpty) cancel("fixtures missing")
+    fixtures.foreach(f => AnalyzeSpec.assertParity(spark, Seq(f)))
+    AnalyzeSpec.assertParity(spark, fixtures)
+  }
 }
