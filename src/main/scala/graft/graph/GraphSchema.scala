@@ -100,3 +100,9 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
   def checkpointed(): PropertyGraph =
     copy(nodes = nodes.localCheckpoint(true), edges = edges.localCheckpoint(true))
 }
+
+/** A graph held on the driver as rows in the stored schemas, for
+  * [[GraphStore.save]] to write without a Spark job: `nodeBatches` become
+  * one node file each, in the order given, and `nextId` is the ID
+  * high-water mark (see [[PropertyGraph]]). */
+final case class LocalGraph(nodeBatches: Seq[Seq[Row]], edges: Seq[Row], nextId: Long)

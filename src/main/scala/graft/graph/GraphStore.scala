@@ -5,7 +5,9 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.StructType
 
 /** Parquet warehouse: one directory per repo graph (SURVEY.md §1.6).
   *
@@ -158,7 +160,10 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
   private def written[T](name: String)(write: => T): T =
     try write finally synchronized { served -= name; writes += 1 }
 
-  /** Persist a snapshot with stage-then-swap (atomic per table).
+  /** Persist a snapshot with stage-then-swap (atomic per table), written
+    * by Spark jobs. A graph already held on the driver takes the other
+    * writer, the [[LocalGraph]] overload, which leaves the same files in no
+    * job; both write through one [[swap]].
     *
     * Physical layout (SURVEY §4): edges are hive-partitioned by `type` —
     * every traversal filters on edge type (J1–J8, the DEFINES* cascade), so
@@ -167,16 +172,14 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
     * pruning on source-id probes. The `repartition(type)` keeps one file
     * per type here; at warehouse scale it becomes
     * `repartition(N, type, src)` for N files per type with disjoint src
-    * ranges, same layout contract. */
-  def save(name: String, g: PropertyGraph): Unit = written(name) {
+    * ranges, same layout contract. Over-guard ingests, re-analysis,
+    * `switch_commit` and streaming all write through here. */
+  def save(name: String, g: PropertyGraph): Unit = swap(name, g.nextIdHint) { (nodes, edges) =>
     import org.apache.spark.sql.functions.col
-    val stage = new Path(repoDir(name), s".stage-${java.util.UUID.randomUUID()}")
-    val stagedNodes = new Path(stage, "nodes")
-    val stagedEdges = new Path(stage, "edges")
     // Materialize BEFORE dropping the old dirs: the new snapshot's plan may
     // read the old files (read-modify-write).
     GraphSchema.conform(g.nodes, GraphSchema.nodeSchema)
-      .write.mode(SaveMode.Overwrite).parquet(stagedNodes.toString)
+      .write.mode(SaveMode.Overwrite).parquet(nodes.toString)
     GraphSchema.conform(g.edges, GraphSchema.edgeSchema)
       .repartition(col("type"))
       // the writer REQUIRES an ordering prefixed by the partition columns;
@@ -187,7 +190,42 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       // how the frame being saved was partitioned
       .sortWithinPartitions(col("type"), col("src"), col("dst"), col("line"))
       .write.partitionBy("type")
-      .mode(SaveMode.Overwrite).parquet(stagedEdges.toString)
+      .mode(SaveMode.Overwrite).parquet(edges.toString)
+  }
+
+  /** Persist a graph held on the driver in no Spark job: Spark's parquet
+    * writer runs on the driver ([[LocalParquet]]) and leaves the files the
+    * DataFrame writer leaves for the same rows, split the same way. Each
+    * node batch is one file (an empty graph keeps one file for the schema,
+    * as Spark's writer does); each edge type is one file under its
+    * partition directory, in [[save]]'s (src, dst, line) order, nulls
+    * first. */
+  def save(name: String, g: LocalGraph): Unit = swap(name, Some(g.nextId)) { (nodes, edges) =>
+    val nodeFiles = new LocalParquet(spark, nodes, GraphSchema.nodeSchema)
+    val batches = g.nodeBatches.filter(_.nonEmpty)
+    (if (batches.isEmpty) Seq(Nil) else batches).foreach(b => nodeFiles.file("", b.iterator))
+    nodeFiles.commit()
+
+    val es = GraphSchema.edgeSchema
+    val Seq(src, dst, tpe, line) = Seq("src", "dst", "type", "line").map(es.fieldIndex)
+    val kept = es.indices.filter(_ != tpe) // the data columns: all but the partition column
+    val edgeFiles = new LocalParquet(spark, edges, StructType(kept.map(es.fields(_))))
+    val order = Ordering.by((r: Row) =>
+      (r.getLong(src), r.getLong(dst), if (r.isNullAt(line)) None else Some(r.getLong(line))))
+    for ((t, rows) <- g.edges.groupBy(_.getString(tpe)))
+      edgeFiles.file(ExternalCatalogUtils.getPartitionPathString("type", t),
+        rows.sorted(order).iterator.map(r => Row.fromSeq(kept.map(r.get))))
+    edgeFiles.commit()
+  }
+
+  /** Writes a snapshot of `name` into a stage directory with `write(nodes,
+    * edges)`, then swaps the two tables in and records `next_id`. */
+  private def swap(name: String, nextId: Option[Long])(
+      write: (Path, Path) => Unit): Unit = written(name) {
+    val stage = new Path(repoDir(name), s".stage-${java.util.UUID.randomUUID()}")
+    val stagedNodes = new Path(stage, "nodes")
+    val stagedEdges = new Path(stage, "edges")
+    write(stagedNodes, stagedEdges)
     // checked aside-swap per table (the util.StageSwap posture): Hadoop
     // FileSystems report most rename failures by returning FALSE — the
     // old delete-then-unchecked-rename would silently lose the graph on
@@ -217,7 +255,7 @@ final class GraphStore(spark: SparkSession, val warehouse: String) {
       .filter(_.getPath.getName.startsWith(".stage-"))
       .foreach(s => fs.delete(s.getPath, true))
     // persist the ID high-water mark (see load) — monotone across deletes
-    g.nextIdHint.foreach(h => setInfo(name, Map(GraphStore.NextIdKey -> h.toString)))
+    nextId.foreach(h => setInfo(name, Map(GraphStore.NextIdKey -> h.toString)))
   }
 
   /** C6: copy a whole graph under a new name (`api/graph.py:64-83`). */

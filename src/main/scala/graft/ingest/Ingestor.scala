@@ -26,8 +26,9 @@ import graft.graph.{CodeGraph, GraphQueries, GraphStore}
   * runs 56 Spark jobs (then 17 in `checkpointNow` and 3 in `save`), almost
   * all of it per-job cold overhead. [[analyze]] therefore builds a fresh
   * graph within the serving guard on the driver ([[LocalIngest]], the
-  * same rows and IDs), and this path serves re-analysis, history walks,
-  * streaming and input over the guard.
+  * same rows and IDs) and writes it with Spark's parquet writer on the
+  * driver: 0 Spark jobs in all. This path serves re-analysis, history
+  * walks, streaming and input over the guard.
   */
 object Ingestor {
 
@@ -86,12 +87,13 @@ object Ingestor {
   /** `analyze_folder`'s and `analyze_repo`'s write of graph `name`. A graph
     * the store does not hold yet, whose extraction stays within the store's
     * serving guard ([[GraphStore.servingLimit]]), is built on the driver
-    * ([[LocalIngest]]) and written in one [[GraphStore.save]]; any other
-    * input goes through [[ingest]] and the mutation batches. */
+    * ([[LocalIngest]]) and written by [[GraphStore.save]]'s driver writer,
+    * in no Spark job; any other input goes through [[ingest]] and the
+    * mutation batches. */
   def analyze(spark: SparkSession, store: GraphStore, name: String,
       sources: Seq[SourceFile]): Unit =
     (if (store.exists(name)) None
-     else LocalIngest.build(spark, sources, store.servingLimit)) match {
+     else LocalIngest.build(sources, store.servingLimit)) match {
       case Some(local) => store.save(name, local)
       case None =>
         val g = new CodeGraph(spark, name, Some(store))

@@ -1,18 +1,18 @@
 package graft.ingest
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
-import graft.graph.{GraphSchema, PropertyGraph}
+import graft.graph.{GraphSchema, LocalGraph}
 import Resolution.{Candidate, Rank, Target}
 
 /** [[Ingestor.ingest]] into an empty graph, computed on the driver: the
-  * same node and edge rows, IDs and `next_id`, as two local frames for one
-  * [[graft.graph.GraphStore.save]]. On a 4-core VM the build takes 1.3 s
-  * for 100 files and 4.9 s for 5,000, where the Spark path ran 73 cold
-  * jobs before its save (15.6 s and 27.7 s for ingest alone).
+  * same node and edge rows, IDs and `next_id`, as a [[graft.graph.LocalGraph]] that
+  * [[graft.graph.GraphStore.save]] writes without a Spark job. On a 4-core
+  * VM the build takes 1.3 s for 100 files and 4.9 s for 5,000, where the
+  * Spark path ran 73 cold jobs before its save (15.6 s and 27.7 s for
+  * ingest alone).
   *
   * The rows follow the Spark path's rules exactly:
   *  - Files take IDs from 1 in (path, name, ext) order, entities follow in
@@ -44,8 +44,7 @@ private[ingest] object LocalIngest {
   /** The graph of `sources`, or None when the extraction passes `limit`
     * rows (files + entities bound the nodes, entities + refs the edges;
     * extraction stops there) or two sources share a logical path. */
-  def build(spark: SparkSession, sources: Seq[SourceFile],
-      limit: Long): Option[PropertyGraph] = {
+  def build(sources: Seq[SourceFile], limit: Long): Option[LocalGraph] = {
     val files = mutable.ArrayBuffer.empty[(String, FileExtraction)]
     var nodeBound, edgeBound = 0L
     val it = sources.iterator
@@ -59,11 +58,10 @@ private[ingest] object LocalIngest {
     }
     if (nodeBound > limit || edgeBound > limit ||
         files.map(_._1).distinct.size < files.size) return None
-    Some(resolve(spark, files.toSeq))
+    Some(resolve(files.toSeq))
   }
 
-  private def resolve(spark: SparkSession,
-      files: Seq[(String, FileExtraction)]): PropertyGraph = {
+  private def resolve(files: Seq[(String, FileExtraction)]): LocalGraph = {
     var nextId = 0L
     def assign[K](keys: Iterable[K]): Map[K, Long] =
       keys.map { k => nextId += 1; k -> nextId }.toMap
@@ -141,10 +139,10 @@ private[ingest] object LocalIngest {
     // ---- rows in the stored schema ---------------------------------------
     val none = null
     val noProps = Map.empty[String, String]
-    // one node partition, so one file, per batch, as the Spark path writes
-    // them: entities, files and new stubs, each in ID order. The files come
-    // out byte for byte the Spark path's, and Spark scans a table's files
-    // largest first, so the snapshot scans in the Spark path's order, which
+    // one node file per batch, as the Spark path writes them: entities,
+    // files and new stubs, each in ID order. The files come out byte for
+    // byte the Spark path's, and Spark scans a table's files largest first,
+    // so the snapshot scans in the Spark path's order, which
     // `graph_entities` replies in.
     val entityRows = entityIds.toSeq.sortBy(_._2).map {
       case (k @ (label, name, path, start, end), id) =>
@@ -166,11 +164,7 @@ private[ingest] object LocalIngest {
     } ++ typed.map { case (s, d, t) =>
       Row(s, d, t, none, none, none, none, noProps)
     }
-    val batches = spark.sparkContext.parallelize(Seq(entityRows, fileRows, stubRows), 3)
-    PropertyGraph(
-      spark.createDataFrame(batches.flatMap(identity), GraphSchema.nodeSchema),
-      spark.createDataFrame(edgeRows.asJava, GraphSchema.edgeSchema),
-      nextIdHint = Some(nextId))
+    LocalGraph(Seq(entityRows, fileRows, stubRows), edgeRows, nextId)
   }
 
   private def stubKey(name: String): EntityKey = ("Function", name, "", 0L, 0L)

@@ -59,25 +59,15 @@ class AnalyzeSpec extends SparkSpec {
     assert(targets(node("hold", "lib/pre.py"), "CALLS") == Set("twice" -> "lib/pre.py"))
   }
 
-  /** Spark jobs of [[GraphStore.save]] writing `store`'s graph `name` again. */
-  private def saveJobs(s: GraphStore, name: String): Int = {
-    val g = s.load(name)
-    sparkJobs(s.save(name + "_copy", g))
-  }
-
-  test("routing: a guard-sized fresh analyze_folder runs only the save's jobs") {
+  test("routing: a guard-sized fresh analyze_folder runs no Spark job") {
     val dir = Files.createTempDirectory("graft-analyze-src").resolve("fresh")
     ServingIndexSpec.write(dir, ServingIndexSpec.tree(5))
-    val s = store()
-    val api = new Endpoints(spark, s)
-    val jobs = sparkJobs(assert(api.analyzeFolder(Some(dir.toString)).code == 200))
-    assert(jobs > 0 && jobs <= saveJobs(s, "fresh"))
-    // nothing before the write: the driver build itself runs no job
-    assert(sparkJobs(LocalIngest.build(spark, ServingIndexSpec.tree(5), guard)) == 0)
+    val api = new Endpoints(spark, store())
+    assert(sparkJobs(assert(api.analyzeFolder(Some(dir.toString)).code == 200)) == 0)
     // the Spark path, for scale: every mutation batch runs jobs of its own
     val viaSpark = sparkJobs(Ingestor.analyze(spark, store(-1), "fresh",
       ServingIndexSpec.tree(5)))
-    assert(viaSpark > jobs + 10, viaSpark)
+    assert(viaSpark > 10, viaSpark)
   }
 
   test("routing: one row over the guard, or a repo already stored, takes the Spark path") {
@@ -85,18 +75,17 @@ class AnalyzeSpec extends SparkSpec {
     val fx = sources.flatMap(s => Ingestor.extract(s.path, s.source)).map(_._2)
     val rows = math.max(fx.size + fx.map(_.entities.size).sum,
       fx.map(f => f.entities.size + f.refs.size).sum)
-    assert(LocalIngest.build(spark, sources, rows).isDefined)
-    assert(LocalIngest.build(spark, sources, rows - 1).isEmpty)
-    /** Whether the `analyses`-th analysis of `sources` ran no more jobs
-      * than the save it ends with. */
-    def onlySaved(limit: Long, analyses: Int): Boolean = {
+    assert(LocalIngest.build(sources, rows).isDefined)
+    assert(LocalIngest.build(sources, rows - 1).isEmpty)
+    /** Whether the `analyses`-th analysis of `sources` ran no Spark job. */
+    def ranNoJob(limit: Long, analyses: Int): Boolean = {
       val s = store(limit)
       (1 until analyses).foreach(_ => Ingestor.analyze(spark, s, "r", sources))
-      sparkJobs(Ingestor.analyze(spark, s, "r", sources)) <= saveJobs(s, "r")
+      sparkJobs(Ingestor.analyze(spark, s, "r", sources)) == 0
     }
-    assert(onlySaved(rows, 1))
-    assert(!onlySaved(rows - 1, 1))
-    assert(!onlySaved(rows, 2), "re-analysis goes through the mutations")
+    assert(ranNoJob(rows, 1))
+    assert(!ranNoJob(rows - 1, 1))
+    assert(!ranNoJob(rows, 2), "re-analysis goes through the mutations")
   }
 
   test("routing: a source beside its pre-extracted twin takes the Spark path") {
@@ -106,7 +95,7 @@ class AnalyzeSpec extends SparkSpec {
       src("lib/u.py.jsonl",
         """{"kind":"entity","label":"Function","name":"twin","start":1,"end":2,"doc":"","parent":-1}"""),
       src("main.py", "def main():", "    solo()"))
-    assert(LocalIngest.build(spark, sources, guard).isEmpty)
+    assert(LocalIngest.build(sources, guard).isEmpty)
     val viaGuard = analyzed(spark, sources, guard)
     assert(viaGuard.nodes.count(_.getAs[String]("name") == "twin") == 1)
     assertSame(viaGuard, analyzed(spark, sources, -1))
@@ -172,7 +161,7 @@ object AnalyzeSpec {
     * ([[assertSame]]); returns the driver path's rows. */
   def assertParity(spark: SparkSession,
       sources: Seq[Ingestor.SourceFile]): (Seq[Row], Seq[Row]) = {
-    assert(LocalIngest.build(spark, sources, guard).isDefined,
+    assert(LocalIngest.build(sources, guard).isDefined,
       "the driver path must take this input")
     val local = analyzed(spark, sources, guard)
     assertSame(local, analyzed(spark, sources, -1))
