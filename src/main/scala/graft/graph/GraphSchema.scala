@@ -102,7 +102,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
 }
 
 /** A graph held on the driver as rows in the stored schemas, for
-  * [[GraphStore.save]] to write without a Spark job: `nodeBatches` become
-  * one node file each, in the order given, and `nextId` is the ID
-  * high-water mark (see [[PropertyGraph]]). */
+  * [[GraphStore.save]] to write without a Spark job: each non-empty batch
+  * of `nodeBatches` becomes one node file, its rows in the order given, and
+  * `nextId` is the ID high-water mark (see [[PropertyGraph]]). */
 final case class LocalGraph(nodeBatches: Seq[Seq[Row]], edges: Seq[Row], nextId: Long)
