@@ -74,8 +74,9 @@ object Bench {
     // which parallelize across driver threads, and at 86 queries a serial
     // pass (216 s in round 5, growing linearly with the registry) had
     // outgrown the timed pass itself. Spark job submission is thread-safe;
-    // every gate query builds per-call state (CodeGraph instances, memo
-    // TrieMaps), and the post-warmup sweep resets shared residents anyway.
+    // every gate query builds per-call state (CodeGraph instances), each
+    // resident memo builds a key once under concurrent callers, and the
+    // post-warmup sweep resets the memos anyway.
     // Concurrency ladder, measured at sf0.1 with the 93-query registry:
     // serial 216 s (r5) → 8 threads 74 s (r6/r7) → 16 threads: see
     // bench_full.json warmup_sec — compile latency is the pole, and 32
@@ -100,16 +101,17 @@ object Bench {
     // timed pass starts with a clean storage pool — leftover blocks from 60+
     // warmup queries otherwise evict the caches the timed queries build
     // (measured: d04 4.3 s clean vs 18 s under warmup-residue pressure).
-    // The sweep must ALSO invalidate TpchGraph's memo (round-4 bug: the memo
-    // kept handing out unpersisted frames, so every timed g-query rebuilt
-    // the graph from parquet — g09 8.5→19.1 s, g10 11.4→25.0 s) and then
-    // re-warm the target-SF graph, restoring the resident-server cost model.
+    // The sweep must ALSO reset the resident memos (round-4 bug: the graph
+    // memo kept handing out unpersisted frames, so every timed g-query
+    // rebuilt the graph from parquet — g09 8.5→19.1 s, g10 11.4→25.0 s)
+    // and then re-warm the target-SF graph, restoring the resident-server
+    // cost model. The warm-up's keys are the warm dir, never sfDir, so the
+    // reset drops nothing a timed gate would have reused.
     try {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     } catch { case _: Throwable => }
-    graft.queries.TpchGraph.reset()
-    graft.queries.PipelineQueries.resetShared()
+    graft.util.Resident.reset()
     warmBaseTables()
     // settle AFTER the sweep, inside the warmup span: the 16-way warmup
     // leaves ~90 queries of dead frames whose async ContextCleaner RPCs

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.graph.{GraphSchema, PropertyGraph}
-import graft.util.Tables
+import graft.util.{Resident, Tables}
 
 /** A property graph derived deterministically from the TPC-H-ish testdata,
   * used to exercise the graph operator surface (SURVEY.md §2.2–§2.3)
@@ -35,28 +35,13 @@ object TpchGraph {
   // FalkorDB memory across queries, so a query paying a full rebuild of the
   // node/edge tables every call is the wrong cost model. First build per
   // dir caches both tables; later queries scan the cached columnar blocks.
-  private val resident =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), PropertyGraph]
+  private val resident = Resident.memo[PropertyGraph] { g =>
+    g.nodes.unpersist(blocking = false)
+    g.edges.unpersist(blocking = false)
+  }
 
   def build(spark: SparkSession, d: String): PropertyGraph =
-    resident.getOrElseUpdate((spark, d), buildUncached(spark, d).cache())
-
-  /** Drop every resident graph: unpersist the cached blocks AND clear the
-    * memo, so the next [[build]] re-caches from scratch. An external
-    * `catalog.clearCache()` alone is NOT enough — the memo would keep
-    * handing out frames whose `.cache()` marker was dropped, and every
-    * later query would silently recompute the graph from parquet (the
-    * round-4 bench regression on g08–g10). Callers that sweep Spark's
-    * storage pool must call this in the same breath. */
-  def reset(): Unit = {
-    resident.values.foreach { g =>
-      try {
-        g.nodes.unpersist(blocking = false)
-        g.edges.unpersist(blocking = false)
-      } catch { case _: Throwable => () }
-    }
-    resident.clear()
-  }
+    resident(spark, d)(buildUncached(spark, d).cache())
 
   def buildUncached(spark: SparkSession, d: String): PropertyGraph = {
     import spark.implicits._

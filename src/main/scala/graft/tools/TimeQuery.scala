@@ -29,7 +29,7 @@ object TimeQuery {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       } catch { case _: Throwable => }
-      graft.queries.TpchGraph.reset()
+      graft.util.Resident.reset()
     }
     names.foreach { name =>
       val times = (1 to reps).map { i =>

@@ -142,7 +142,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // ...whose scan is served from the cache built by d03
     assert(a.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
       "shared pair frame is not cache-backed after d03 ran")
-    graft.queries.PipelineQueries.resetShared()
+    graft.util.Resident.reset()
   }
 
   test("q03 broadcasts the filtered dimension and takes ordered top-k") {
