@@ -192,34 +192,7 @@ object Bench {
     }
     System.err.println(
       f"[bench] sentinels cal=$cal%.2f io=$io%.2f warmup=$warmup%.1f")
-    // deterministic name order: Map iteration order shifts whenever a query
-    // is added, silently moving queries into/out of the cold early slots
-    // (per-query JIT of generated code is 2-6 s on this VM) — sorted order
-    // keeps per-query numbers comparable across rounds
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Reclaim the PREVIOUS query's dead state before timing this one:
-      // localCheckpoint blocks, shuffle files and broadcasts are only
-      // dropped when the ContextCleaner sees their owners get GC'd, so
-      // without an explicit GC each query pays its predecessors' garbage
-      // (measured in-suite vs isolation at sf0.1: g09 15.4 s vs 7.8 s,
-      // g08 18.0 s vs 10.3 s, same code). A resident server GCs while
-      // idle between requests — this sits outside the timed span for the
-      // same reason. Each query's OWN allocation cost stays inside.
-      // two GC passes with a pause: the first queues the dead references
-      // with the async ContextCleaner, the pause lets its unpersist/
-      // shuffle-delete RPCs drain, the second reclaims what they freed —
-      // otherwise the cleanup storm from a heavy predecessor (g08's
-      // mutation build is ~1.65M nodes of checkpoint blocks) runs
-      // CONCURRENTLY with this query's jobs and serializes on the
-      // BlockManager
-      System.gc()
-      Thread.sleep(400)
-      System.gc()
-      Thread.sleep(100)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val (results, failed) = timeGates(spark, selected.toSeq, sfDir)
     // The driver captures only the LAST 2000 chars of stdout and parses the
     // metric line out of that window; sbt's "[success]" trailer after us is
     // suppressed since round 17 (build.sbt showSuccess := false, ~74 chars
@@ -280,10 +253,58 @@ object Bench {
     // ~1,860/2,000 against the parse window
     val sfBase = new java.io.File(sfDir.replaceAll("/+$", "")).getName
     val line = s"""{"metric":"total","value":${f1(total)},"cal":${f2(cal)},"queries":$qs,"sf":"$sfBase"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
-      s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"cal_sec":$cal,"io_sec":$io,"queries_note":"stdout uses prefix keys at 1dp; this file is full-name full-precision","queries":$qsFull,"sf":"$sfDir"}\n""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":$total,"unit":"sec","warmup_sec":$warmup,"cal_sec":$cal,"io_sec":$io,"queries_note":"stdout uses prefix keys at 1dp; this file is full-name full-precision","queries":$qsFull,"failed":$failedJson,"sf":"$sfDir"}\n""".getBytes("UTF-8"))
     catch { case _: Throwable => }
     println(line)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Time each gate's `.count()` at `sfDir`, in name order. Returns the
+    * seconds per gate and the names of the gates that threw: a failing
+    * gate's time is no measurement, so it is reported on stderr and in the
+    * failed list (Bench then exits nonzero), never passed off as a fast
+    * run. */
+  def timeGates(spark: org.apache.spark.sql.SparkSession,
+      gates: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)],
+      sfDir: String): (Seq[(String, Double)], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    // deterministic name order: Map iteration order shifts whenever a query
+    // is added, silently moving queries into/out of the cold early slots
+    // (per-query JIT of generated code is 2-6 s on this VM) — sorted order
+    // keeps per-query numbers comparable across rounds
+    val results = gates.sortBy(_._1).map { case (name, fn) =>
+      // Reclaim the PREVIOUS query's dead state before timing this one:
+      // localCheckpoint blocks, shuffle files and broadcasts are only
+      // dropped when the ContextCleaner sees their owners get GC'd, so
+      // without an explicit GC each query pays its predecessors' garbage
+      // (measured in-suite vs isolation at sf0.1: g09 15.4 s vs 7.8 s,
+      // g08 18.0 s vs 10.3 s, same code). A resident server GCs while
+      // idle between requests — this sits outside the timed span for the
+      // same reason. Each query's OWN allocation cost stays inside.
+      // two GC passes with a pause: the first queues the dead references
+      // with the async ContextCleaner, the pause lets its unpersist/
+      // shuffle-delete RPCs drain, the second reclaims what they freed —
+      // otherwise the cleanup storm from a heavy predecessor (g08's
+      // mutation build is ~1.65M nodes of checkpoint blocks) runs
+      // CONCURRENTLY with this query's jobs and serializes on the
+      // BlockManager
+      System.gc()
+      Thread.sleep(400)
+      System.gc()
+      Thread.sleep(100)
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count() } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] gate failed: $name: $e")
+          failed += name
+      }
+      name -> (System.nanoTime() - t0) / 1e9
+    }
+    (results, failed.result())
   }
 }
+

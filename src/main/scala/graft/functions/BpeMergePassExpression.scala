@@ -69,18 +69,18 @@ object BpeMergePass {
   private type Index = java.util.HashMap[UTF8String, Inner]
 
   /** One thread's cached index: `bytes` is a private copy of the unsafe
-    * map region it was parsed from (content check), `tag` the source
-    * instance for non-unsafe MapData (those are driver/literal objects
-    * whose identity is stable). */
-  private final class Cached(val tag: AnyRef, val bytes: Array[Byte],
-      val idx: Index)
+    * map region it was parsed from (content check). Never evicted: each
+    * pooled thread keeps its last map's index until its next map. */
+  private final class Cached(val bytes: Array[Byte], val idx: Index)
   private val tl = new ThreadLocal[Cached]
 
   /** Parse `numChars(last) ":" last next → merged` entries into the
     * two-level index. Entries that do not parse as a pair key can never
-    * match a probe (the probe side builds keys in exactly this format),
-    * so skipping them preserves semantics. All stored strings are CLONED
-    * out of the map region — the index outlives any one row buffer. */
+    * match a probe (the probe side builds keys in exactly this format,
+    * the length in decimal WITHOUT leading zeros — so "02:ab" is skipped
+    * where "2:ab" indexes), so skipping them preserves semantics. All
+    * stored strings are CLONED out of the map region — the index
+    * outlives any one row buffer. */
   private def build(m: MapData): Index = {
     val keys = m.keyArray()
     val vals = m.valueArray()
@@ -99,7 +99,9 @@ object BpeMergePass {
           d = d * 10L + (k.getByte(i) - '0')
           i += 1
         }
-        if (i > 0 && d <= Int.MaxValue && i < nb && k.getByte(i) == ':') {
+        val canonical = i == 1 || (i > 1 && k.getByte(0) != '0')
+        if (canonical && d <= Int.MaxValue && i < nb &&
+            k.getByte(i) == ':') {
           val total = k.numChars()
           val lastStart = i + 1
           if (d <= (total - lastStart).toLong) {
@@ -125,14 +127,15 @@ object BpeMergePass {
 
   /** The index for `m`, cached per thread and verified by content: an
     * unsafe map region is byte-compared against the cached copy (reused
-    * row buffers make instance identity unsound); other MapData kinds
-    * (literal/driver-built) are reference-compared. The trainer broadcasts
-    * one map per round, so this builds once per (thread, round). */
+    * row buffers make instance identity unsound). The trainer broadcasts
+    * one map per round, so this builds once per (thread, round). Other
+    * MapData kinds are rare on executors and have no cheap content check,
+    * so their index is built per call. */
   private def indexFor(m: MapData): Index = m match {
     case um: UnsafeMapData =>
       val size = um.getSizeInBytes
       val c = tl.get()
-      if (c != null && c.bytes != null && c.bytes.length == size &&
+      if (c != null && c.bytes.length == size &&
           ByteArrayMethods.arrayEquals(um.getBaseObject, um.getBaseOffset,
             c.bytes, Platform.BYTE_ARRAY_OFFSET, size.toLong)) c.idx
       else {
@@ -140,17 +143,10 @@ object BpeMergePass {
         Platform.copyMemory(um.getBaseObject, um.getBaseOffset,
           copy, Platform.BYTE_ARRAY_OFFSET, size.toLong)
         val idx = build(um)
-        tl.set(new Cached(null, copy, idx))
+        tl.set(new Cached(copy, idx))
         idx
       }
-    case g =>
-      val c = tl.get()
-      if (c != null && (c.tag eq g)) c.idx
-      else {
-        val idx = build(g)
-        tl.set(new Cached(g, null, idx))
-        idx
-      }
+    case g => build(g)
   }
 
   /** Tight-loop kernel; public so generated code can call it. Appended

@@ -114,7 +114,7 @@ object Dedup {
   }
 
   /** The ONE copy of canonicalize + blocklist-mark the recompute
-    * ([[urlDedupDecisions]]) and index ([[writeUrlIndex]] /
+    * ([[urlDedupDecisions]]) and index ([[urlIndexRows]] /
     * [[urlDedupAgainstIndex]]) paths share — so a canonicalization or
     * blocklist-semantics tweak cannot land in one and miss the other. */
   private def markBlockedUrls(docs: DataFrame, blocklist: DataFrame,
@@ -130,59 +130,29 @@ object Dedup {
           .withColumn("_blocked", lit(true)), Bpe.DictBroadcastLimit),
         Seq("domain"), "left_outer")
 
-  /** One snapshot's contribution to the canonical-URL keeper index:
-    * post-blocklist canonical URLs with their minimal doc id. */
-  private def urlIndexRows(docs: DataFrame, blocklist: DataFrame,
-      idCol: String, urlCol: String): DataFrame =
+  /** One snapshot's rows of the CANONICAL-URL KEEPER INDEX — (canonical_url,
+    * keep_id): post-blocklist canonical URLs with their minimal doc id.
+    * Built and appended through [[graft.util.PersistedIndex]] (the d22
+    * daily-crawl shape: yesterday's canonical URLs persist, today's
+    * increment probes and appends without the stored corpus ever
+    * re-canonicalizing). The index is partial minima, re-minimized per URL
+    * at probe time; [[urlKeepers]] is also its index-only compaction. The
+    * blocklist applies at BUILD for stored docs (a blocked doc must never
+    * become a stored keeper) and at probe for increment docs; callers must
+    * probe with the same list they built with. */
+  def urlIndexRows(docs: DataFrame, blocklist: DataFrame,
+      idCol: String = "doc_id", urlCol: String = "url"): DataFrame =
     markBlockedUrls(docs, blocklist, idCol, urlCol)
       .filter(col("_blocked").isNull)
       .groupBy(col("canonical_url"))
       .agg(min(col(idCol)).as("keep_id"))
 
-  /** Persist a corpus's CANONICAL-URL KEEPER INDEX — (canonical_url,
-    * keep_id) parquet — the d17/d21 build-once/probe-many lifecycle in
-    * the URL domain (the daily-crawl shape: yesterday's canonical URLs
-    * persist, today's increment probes and appends without the stored
-    * corpus ever re-canonicalizing). The blocklist applies at BUILD for
-    * stored docs (a blocked doc must never become a stored keeper) and
-    * at probe for increment docs; callers must probe with the same
-    * list they built with — the index stores post-blocklist URLs. */
-  def writeUrlIndex(docs: DataFrame, blocklist: DataFrame, dir: String,
-      idCol: String = "doc_id", urlCol: String = "url"): Unit =
-    urlIndexRows(docs, blocklist, idCol, urlCol)
-      .write.mode("overwrite").parquet(s"$dir/urls")
-
-  /** Admit an increment: append its keeper rows as NEW rows — the index
-    * is append-only partial minima, re-minimized per URL at probe time
-    * (a map-side-combined aggregation over index rows, never the
-    * corpus); [[compactUrlIndex]] folds the accumulated partials back
-    * to one row per URL when probe-side re-minimization cost builds. */
-  def appendUrlIndex(docs: DataFrame, blocklist: DataFrame, dir: String,
-      idCol: String = "doc_id", urlCol: String = "url"): Unit =
-    urlIndexRows(docs, blocklist, idCol, urlCol)
-      .write.mode("append").parquet(s"$dir/urls")
-
-  /** INDEX-ONLY compaction of the append-accumulated keeper index:
-    * re-minimize the stored partial minima — one map-side-combined
-    * groupBy over the INDEX ROWS, never a corpus scan (the corpus-side
-    * rewrite is [[writeUrlIndex]] over the union; this is the cheap
-    * lifecycle half, index-sized regardless of corpus size) — staged
-    * and atomically swapped into place ([[graft.util.StageSwap]]: a
-    * kill mid-compact leaves the old index readable). Probe results
-    * are unchanged by construction — [[urlDedupAgainstIndex]] already
-    * re-minimizes at probe; compaction just materializes that
-    * aggregation once (spec-pinned probe-before == probe-after ==
-    * recompute). */
-  def compactUrlIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    graft.util.StageSwap.rewrite(
-      readUrlIndex(spark, dir)
-        .groupBy(col("canonical_url"))
-        .agg(min(col("keep_id")).as("keep_id")),
-      s"$dir/urls")
-
-  def readUrlIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = spark.read.parquet(s"$dir/urls")
+  /** Fold keeper rows to one minimal id per URL: the probe's read of the
+    * stored side, and (through [[graft.util.PersistedIndex.rewrite]]) the
+    * index-only compaction — index-sized, never a corpus scan, and probe
+    * results unchanged by construction. */
+  def urlKeepers(rows: DataFrame): DataFrame =
+    rows.groupBy(col("canonical_url")).agg(min(col("keep_id")).as("keep_id"))
 
   /** URL-dedup an increment against a persisted index: decisions equal
     * [[urlDedupDecisions]] over (indexed corpus ∪ increment) restricted
@@ -198,9 +168,8 @@ object Dedup {
       urlCol: String = "url"): DataFrame = {
     val spark = newDocs.sparkSession
     val marked = markBlockedUrls(newDocs, blocklist, idCol, urlCol)
-    val stored = readUrlIndex(spark, dir)
-      .groupBy(col("canonical_url"))
-      .agg(min(col("keep_id")).as("_old_id"))
+    val stored = urlKeepers(graft.util.PersistedIndex(spark, dir).rows)
+      .withColumnRenamed("keep_id", "_old_id")
     val newKeep = marked.filter(col("_blocked").isNull)
       .groupBy(col("canonical_url"))
       .agg(min(col(idCol)).as("_new_id"))
@@ -987,64 +956,62 @@ object Dedup {
       .select(col("new_id"), col("corpus_id"), col("jac"))
   }
 
-  /** Persist the corpus's MinHash BAND INDEX — (band, bucket, id), one
-    * row per (doc, band) — as a parquet table: the stored side of the
-    * daily-increment dedup that [[minhashIncrementalWords]]'s scaladoc
-    * promises ("in production the corpus bands are a precomputed stored
-    * table"). Build once per corpus snapshot; every increment then joins
-    * its own bands against the STORED index ([[minhashAgainstIndex]])
-    * without re-hashing the corpus — the dedup twin of the persisted
-    * PQ/IVF/BPE lifecycles. Append new batches' bands with
-    * mode("append") after they are admitted to the corpus. */
+  /** Build the corpus's MinHash BAND INDEX — (band, bucket, id), one row
+    * per (doc, band), through [[graft.util.PersistedIndex]]: the stored
+    * side of the daily-increment dedup that [[minhashIncrementalWords]]'s
+    * scaladoc promises ("in production the corpus bands are a precomputed
+    * stored table"). Build once per corpus snapshot; every increment then
+    * joins its own bands against the STORED index ([[probeBandIndex]])
+    * without re-hashing the corpus, and admitted batches are published
+    * with [[appendBandIndex]]. The banding parameters ARE part of the
+    * index: appends and probes with different w/numHashes/rowsPerBand
+    * would join a different banding scheme against these rows and
+    * silently match nothing, so they live in the index's meta row and
+    * every later operation reuses them. */
   def writeBandIndex(docs: DataFrame, dir: String, w: Int = 5,
       numHashes: Int = 128, rowsPerBand: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    graft.util.PersistedIndex(docs.sparkSession, dir).build(
+      bandIndexRows(docs, w, numHashes, rowsPerBand, idCol, textCol),
+      meta = Seq("w" -> w, "num_hashes" -> numHashes,
+        "rows_per_band" -> rowsPerBand))
+
+  private def bandIndexRows(docs: DataFrame, w: Int, numHashes: Int,
+      rowsPerBand: Int, idCol: String, textCol: String): DataFrame =
     wordBandRows(docs, w, numHashes, rowsPerBand, idCol, textCol)
       .select(col("band"), col("bucket"), col("id"))
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    // the banding parameters ARE part of the index: appends and probes
-    // with different w/numHashes/rowsPerBand would join a different
-    // banding scheme against these rows and silently match nothing —
-    // the stored meta row lets every later operation reuse the build's
-    // parameters instead of trusting the caller to repeat them
-    Seq((w, numHashes, rowsPerBand)).toDF("w", "num_hashes", "rows_per_band")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    invalidateCoverage(spark, dir)
-  }
 
-  def readBandIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = spark.read.parquet(s"$dir/bands")
-
-  private def readBandMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int) = {
-    val m = spark.read.parquet(s"$dir/meta").head()
+  /** (w, numHashes, rowsPerBand) as the index was built. */
+  private def bandParams(idx: graft.util.PersistedIndex): (Int, Int, Int) = {
+    val m = idx.meta
     (m.getAs[Int]("w"), m.getAs[Int]("num_hashes"),
       m.getAs[Int]("rows_per_band"))
   }
 
-  /** Admit a batch to a persisted band index: append its bands using the
-    * INDEX'S OWN stored parameters — the caller cannot corrupt the table
-    * with a mismatched banding scheme. The same batch must also be
-    * unioned into the corpus frame later probes pass (see
-    * [[minhashAgainstIndex]]'s sync contract). */
-  def appendBandIndex(docs: DataFrame, dir: String,
+  /** Admit a batch to a persisted band index as batch `batchId` (a
+    * published id is a no-op): its bands use the INDEX'S OWN stored
+    * parameters — the caller cannot corrupt the table with a mismatched
+    * banding scheme. The same batch must also be unioned into the corpus
+    * frame later probes pass (see [[minhashAgainstIndex]]'s sync
+    * contract). */
+  def appendBandIndex(docs: DataFrame, dir: String, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val (w, nh, rpb) = readBandMeta(docs.sparkSession, dir)
-    wordBandRows(docs, w, nh, rpb, idCol, textCol)
-      .select(col("band"), col("bucket"), col("id"))
-      .write.mode("append").parquet(s"$dir/bands")
-    invalidateCoverage(docs.sparkSession, dir)
+    val idx = graft.util.PersistedIndex(docs.sparkSession, dir)
+    idx.append(batchId, {
+      val (w, nh, rpb) = bandParams(idx)
+      bandIndexRows(docs, w, nh, rpb, idCol, textCol)
+    })
   }
 
-  /** Coverage checks already passed this session, keyed by
-    * (session, index dir, corpus fingerprint): the check is an eager
+  /** Coverage checks already passed, keyed by the session, the index's
+    * published state ([[graft.util.PersistedIndex.state]]: its generation
+    * and batch set) and the corpus fingerprint: the check is an eager
     * index-wide distinct + anti-join, and re-running it on every probe
     * CONSTRUCTION (even of a frame that is never executed) doubled d15's
-    * probe cost. A mutation of the index ([[writeBandIndex]] /
-    * [[appendBandIndex]]) invalidates the dir's entries — an append can
-    * mint new orphans that an earlier pass vouched against.
+    * probe cost. Any publish to the index — a build, an append, a
+    * rewrite — changes the state and so re-arms the check, through any
+    * spelling of the directory: an append can mint new orphans that an
+    * earlier pass vouched against.
     *
     * The fingerprint is the canonicalized plan string PLUS every leaf
     * source's identity (the parquet RELATION'S RESOLVED FILE LISTING +
@@ -1061,18 +1028,7 @@ object Dedup {
     * dir, the engine-wide posture: a concurrent append racing a probe's
     * check-then-vouch could re-vouch a pre-append verdict; coordinate
     * externally before pointing two writers at one index. */
-  private val coverageVouched = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), Unit]
-
-  /** Evict vouches whose SparkSession has STOPPED — the memo is
-    * process-lifetime and strongly holds its sessions as key parts, so
-    * a long-lived multi-session JVM would otherwise retain every dead
-    * session's entries forever. Swept on each probe access: O(entries)
-    * isStopped flag reads, no Spark work. */
-  private def sweepStoppedVouches(): Unit =
-    coverageVouched.keysIterator
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(coverageVouched.remove)
+  private val coverageVouched = graft.util.Resident.memo[Unit](_ => ())
 
   private def corpusFingerprint(df: DataFrame): String = {
     val sb = new StringBuilder
@@ -1098,31 +1054,12 @@ object Dedup {
     sb.append('|')
       .append(df.queryExecution.logical.canonicalized.toString)
     // digest, not the raw string: a 100 TB corpus resolves to 10⁴–10⁵
-    // part files, and the memo retains one key per (session, dir,
-    // corpus) for the session lifetime — same re-arm semantics, O(1)
-    // retained bytes per vouch
+    // part files, and the memo retains one key per (session, index
+    // state, corpus) for the session lifetime — same re-arm semantics,
+    // O(1) retained bytes per vouch
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(sb.toString.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
-  }
-
-  /** One canonical spelling per index dir — FULLY QUALIFIED against the
-    * session's filesystem (scheme + authority + working-dir resolution),
-    * so a probe and an append that name the same physical directory
-    * differently (trailing slash, relative vs absolute, with or without
-    * `file:`) share one memo scope. */
-  private def normDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toString
-  }
-
-  private def invalidateCoverage(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val d = normDir(spark, dir)
-    coverageVouched.keysIterator.filter(_._2 == d)
-      .foreach(coverageVouched.remove)
   }
 
   /** Probe a persisted band index with an increment: reads the stored
@@ -1130,23 +1067,41 @@ object Dedup {
     * BY CONSTRUCTION the scheme the index was built with.
     *
     * NOTE: with `checkCoverage` on, constructing the returned frame runs
-    * the coverage check's Spark job eagerly — once per (session, dir,
-    * corpus plan); later probes with the same corpus reuse the vouched
-    * result, and any write/append to `dir` re-arms the check. */
+    * the coverage check's Spark job eagerly — once per (session, index
+    * state, corpus plan); later probes with the same corpus reuse the
+    * vouched result, and any write/append to `dir` re-arms the check. */
   def probeBandIndex(newDocs: DataFrame, corpus: DataFrame, dir: String,
       threshold: Double = 0.8, idCol: String = "doc_id",
       textCol: String = "text", checkCoverage: Boolean = true): DataFrame = {
     val spark = newDocs.sparkSession
-    sweepStoppedVouches()
-    val (w, nh, rpb) = readBandMeta(spark, dir)
-    val key = (spark, normDir(spark, dir), corpusFingerprint(corpus))
-    val check = checkCoverage && !coverageVouched.contains(key)
-    val out = minhashAgainstIndex(newDocs, corpus, readBandIndex(spark, dir),
-      w, nh, rpb, threshold, idCol, textCol, check)
-    // the check runs eagerly inside the construction above — reaching
-    // this line means it PASSED; a failed check throws before the vouch
-    if (check) coverageVouched.put(key, ())
-    out
+    val idx = graft.util.PersistedIndex(spark, dir)
+    val (w, nh, rpb) = bandParams(idx)
+    val stored = idx.rows
+    // a failed check throws inside the memo's build and vouches nothing
+    if (checkCoverage)
+      coverageVouched(spark, s"${idx.state}|${corpusFingerprint(corpus)}") {
+        requireCoverage(stored, corpus, idCol)
+      }
+    minhashAgainstIndex(newDocs, corpus, stored, w, nh, rpb, threshold,
+      idCol, textCol, checkCoverage = false)
+  }
+
+  /** SYNC CONTRACT of the stored-bands probe: `corpus` must cover every
+    * id in `storedBands` — a candidate whose corpus_id is indexed but
+    * absent from the corpus frame (an admitted batch whose bands were
+    * appended but that was never unioned into the frame) drops at the
+    * gram re-join and its near-dups are silently missed. This turns that
+    * silent miss into a loud failure: one index-sized distinct +
+    * anti-join against the corpus ids, cheap next to the probe itself. */
+  private def requireCoverage(storedBands: DataFrame, corpus: DataFrame,
+      idCol: String): Unit = {
+    val orphans = storedBands.select(col("id")).distinct()
+      .join(corpus.select(col(idCol).cast("long").as("id")),
+        Seq("id"), "left_anti")
+    require(orphans.limit(1).count() == 0L,
+      "band index holds ids absent from the corpus frame — an admitted " +
+        "batch's bands were appended without unioning the batch into " +
+        "the corpus; its near-dups would be silently missed")
   }
 
   /** Increment-vs-corpus near-dup pairs against a STORED band index:
@@ -1163,25 +1118,11 @@ object Dedup {
       rowsPerBand: Int = 2, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
       checkCoverage: Boolean = true): DataFrame = {
-    // SYNC CONTRACT: `corpus` must cover every id in `storedBands` — a
-    // candidate whose corpus_id is indexed but absent from the corpus
-    // frame (an admitted batch whose bands were appended but that was
-    // never unioned into the frame) drops at the gram re-join and its
-    // near-dups are silently missed. checkCoverage (default ON) turns
-    // that silent miss into a loud failure: one index-sized distinct +
-    // anti-join against the corpus ids, cheap next to the probe itself.
-    // Prefer [[probeBandIndex]], whose parameters cannot drift from the
-    // build's.
+    // checkCoverage (default ON) enforces [[requireCoverage]]'s sync
+    // contract. Prefer [[probeBandIndex]], whose parameters cannot drift
+    // from the build's.
     require(numHashes % rowsPerBand == 0, "bands must tile the signature")
-    if (checkCoverage) {
-      val orphans = storedBands.select(col("id")).distinct()
-        .join(corpus.select(col(idCol).cast("long").as("id")),
-          Seq("id"), "left_anti")
-      require(orphans.limit(1).count() == 0L,
-        "band index holds ids absent from the corpus frame — an admitted " +
-          "batch's bands were appended without unioning the batch into " +
-          "the corpus; its near-dups would be silently missed")
-    }
+    if (checkCoverage) requireCoverage(storedBands, corpus, idCol)
     val ng = spread(newDocs.filter(length(col(textCol)) >= 2 * w - 1))
       .select(col(idCol).as("id"),
         TextAnalysis.wordNGrams(TextAnalysis.tokens(col(textCol)), w)

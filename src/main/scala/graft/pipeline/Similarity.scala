@@ -223,16 +223,19 @@ object Similarity {
     (cellCentroids(c), assign)
   }
 
+  /** Persist an IVF index through [[graft.util.PersistedIndex]]: the
+    * assignments are its row table, the centroids a side table. */
   def writeIvfIndex(centroids: DataFrame, assignments: DataFrame,
-      dir: String): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    assignments.write.mode("overwrite").parquet(s"$dir/assignments")
-  }
+      dir: String): Unit =
+    graft.util.PersistedIndex(assignments.sparkSession, dir)
+      .build(assignments, sides = Map("centroids" -> centroids))
 
+  /** (centroids, published assignments) of a persisted IVF index. */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/assignments"))
+      dir: String): (DataFrame, DataFrame) = {
+    val idx = graft.util.PersistedIndex(spark, dir)
+    (idx.side("centroids"), idx.rows)
+  }
 
   /** Assign a vector batch to the NEAREST EXISTING cell of a persisted
     * quantizer frame (cell, cvec) — the no-retrain maintenance path. The
@@ -266,65 +269,44 @@ object Similarity {
   }
 
   /** Append a new-vector batch to a PERSISTED IVF index WITHOUT
-    * retraining (the FAISS `add`-after-`train` maintenance op): assign
-    * the batch against the stored quantizer, append the posting rows.
-    * The quantizer is untouched, so existing probes see the same cells
-    * and the daily-crawl increment costs one assignment pass over the
-    * batch — never a rebuild of the corpus index. */
+    * retraining (the FAISS `add`-after-`train` maintenance op), as batch
+    * `batchId` (a published id is a no-op): assign the batch against the
+    * stored quantizer and publish its posting rows. The quantizer is
+    * untouched, so existing probes see the same cells and the
+    * daily-crawl increment costs one assignment pass over the batch —
+    * never a rebuild of the corpus index. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batch: DataFrame, idCol: String = "vec_id",
+      batchId: Long, batch: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val (cent, _) = readIvfIndex(spark, dir)
-    assignToCells(batch, cent, idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/assignments")
+    val idx = graft.util.PersistedIndex(spark, dir)
+    idx.append(batchId,
+      assignToCells(batch, idx.side("centroids"), idCol, vecCol))
   }
 
-  /** Append a batch to a PERSISTED PQ index WITHOUT retraining: encode
-    * with the stored codebook, append the code rows. Because encoding is
-    * a pure per-row function of (vector, codebook), the appended index is
+  /** Append a batch to a PERSISTED PQ index WITHOUT retraining, as batch
+    * `batchId` (a published id is a no-op): encode with the stored
+    * codebook and publish the code rows. Because encoding is a pure
+    * per-row function of (vector, codebook), the appended index is
     * BIT-IDENTICAL to re-encoding the union corpus against the same
     * codebook — the probe-equality contract the spec pins. */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batch: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val (cb, _) = readPqIndex(spark, dir)
-    pqEncode(batch, cb, idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/codes")
-  }
+      batchId: Long, batch: DataFrame, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit =
+    graft.util.PersistedIndex(spark, dir).append(batchId,
+      pqEncode(batch, readPqIndex(spark, dir)._1, idCol, vecCol))
 
-  /** DELETE ids from a PERSISTED PQ index without retraining — the other
-    * half of index maintenance (takedowns, retention expiry, dedup
-    * verdicts arriving after indexing): one anti-join rewrites the code
-    * table; codebook and every other row are untouched, so the remaining
-    * index is BIT-IDENTICAL to encoding the remaining corpus against the
-    * same codebook (the s10 probe-equality argument, mirrored). The
-    * rewrite reads the files it replaces, so the surviving rows go
-    * through [[graft.util.StageSwap]] — stage dir + atomic swap —
-    * instead of a localCheckpoint pin: nothing materializes in executor
-    * block storage, and a mid-write crash leaves the OLD index intact
-    * rather than a truncated one. */
-  def removeFromPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, removeIds: DataFrame,
-      idCol: String = "vec_id"): Unit = {
-    val (_, codes) = readPqIndex(spark, dir)
-    val remaining = codes.join(
-        removeIds.select(col(idCol).cast("long").as("id")),
-        Seq("id"), "left_anti")
-    graft.util.StageSwap.rewrite(remaining, s"$dir/codes")
-  }
-
-  /** DELETE ids from a PERSISTED IVF index — the posting-list twin of
-    * [[removeFromPqIndex]]: anti-join the assignments, quantizer
-    * untouched. */
-  def removeFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, removeIds: DataFrame,
-      idCol: String = "vec_id"): Unit = {
-    val (_, assign) = readIvfIndex(spark, dir)
-    val remaining = assign.join(
-        removeIds.select(col(idCol).cast("long").as("id")),
-        Seq("id"), "left_anti")
-    graft.util.StageSwap.rewrite(remaining, s"$dir/assignments")
-  }
+  /** DELETE ids from a persisted PQ code table or IVF posting table
+    * without retraining — the other half of index maintenance
+    * (takedowns, retention expiry, dedup verdicts arriving after
+    * indexing): pass it to [[graft.util.PersistedIndex.rewrite]]. One
+    * anti-join rewrites the row table; codebook, quantizer and every
+    * other row are untouched, so the remaining PQ index is BIT-IDENTICAL
+    * to encoding the remaining corpus against the same codebook (the s10
+    * probe-equality argument, mirrored). */
+  def withoutIds(removeIds: DataFrame,
+      idCol: String = "vec_id"): DataFrame => DataFrame =
+    _.join(removeIds.select(col(idCol).cast("long").as("id")),
+      Seq("id"), "left_anti")
 
   /** Probe a LOADED index against the base corpus table. */
   def ivfProbeIndex(queries: DataFrame, corpus: DataFrame,
@@ -589,25 +571,28 @@ object Similarity {
       .select(col("qid"), col("rank"), col("nid"), col("cos"))
   }
 
-  /** Persist a PQ index as two parquet tables: the codebook (one row,
-    * KBs — broadcastable forever) and the code table (m ints per corpus
-    * vector — the 32× compressed probe scan). Build once, probe from any
-    * session: the [[buildIvfIndex]] lifecycle, for PQ. */
+  /** Persist a PQ index through [[graft.util.PersistedIndex]]: the code
+    * table (m ints per corpus vector — the 32× compressed probe scan) is
+    * its row table, the codebook (one row, KBs — broadcastable forever) a
+    * side table. Build once, probe from any session: the
+    * [[buildIvfIndex]] lifecycle, for PQ. */
   def writePqIndex(spark: org.apache.spark.sql.SparkSession,
       codebook: Array[Array[Array[Double]]], codes: DataFrame,
       dir: String): Unit = {
     import spark.implicits._
-    Seq(Tuple1(codebook.toSeq.map(_.toSeq.map(_.toSeq)))).toDF("cb")
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
+    graft.util.PersistedIndex(spark, dir).build(codes, sides = Map(
+      "codebook" -> Seq(Tuple1(codebook.toSeq.map(_.toSeq.map(_.toSeq))))
+        .toDF("cb")))
   }
 
+  /** (codebook, published codes) of a persisted PQ index. */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Array[Array[Array[Double]]], DataFrame) = {
-    val cb = spark.read.parquet(s"$dir/codebook").head()
+    val idx = graft.util.PersistedIndex(spark, dir)
+    val cb = idx.side("codebook").head()
       .getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](0)
       .map(_.map(_.toArray).toArray).toArray
-    (cb, spark.read.parquet(s"$dir/codes"))
+    (cb, idx.rows)
   }
 
   /** IVFADC (Jégou et al. 2011, §IV; the FAISS IVF+PQ composition): the

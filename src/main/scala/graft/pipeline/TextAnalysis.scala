@@ -288,17 +288,17 @@ object TextAnalysis {
       .join(benchGrams, Seq("gram"), "left_semi")
       .select(col(idCol)).distinct()
 
-  /** Persist a benchmark suite's DECONTAMINATION INDEX — the exact
-    * distinct n-gram set (parquet: the verify side) plus its Bloom
-    * sketch bytes (`bloom.bin`, [[org.apache.spark.util.sketch
-    * .BloomFilter.writeTo]]: the broadcast prefilter side) and the
-    * policy meta (n, fpp) — the d17/d21/d22 build-once/probe-many
-    * lifecycle in the decontamination domain: an eval suite's gram set
-    * is built ONCE per benchmark release and every later training
-    * batch probes it without the benchmark corpus ever re-tokenizing.
-    * Bloom bits cannot absorb appends (unlike the count/min-partial
-    * indexes) — admitting a new suite means a second index directory
-    * probed alongside, or the INDEX-ONLY union rewrite
+  /** Build a benchmark suite's DECONTAMINATION INDEX through
+    * [[graft.util.PersistedIndex]] — the exact distinct n-gram set (its
+    * row table: the verify side) plus its Bloom sketch bytes (`bloom.bin`,
+    * [[org.apache.spark.util.sketch.BloomFilter.writeTo]]: the broadcast
+    * prefilter side) and the policy meta (n, fpp) — the
+    * build-once/probe-many lifecycle in the decontamination domain: an
+    * eval suite's gram set is built ONCE per benchmark release and every
+    * later training batch probes it without the benchmark corpus ever
+    * re-tokenizing. Bloom bits cannot absorb appends (unlike the
+    * count/min-partial indexes) — admitting a new suite means a second
+    * index directory probed alongside, or the INDEX-ONLY union rebuild
     * ([[mergeContamIndexes]] — no corpus ever re-tokenizes). */
   def writeContamIndex(benchmark: DataFrame, dir: String, n: Int,
       textCol: String = "text", fpp: Double = 0.01): Unit =
@@ -308,39 +308,27 @@ object TextAnalysis {
         .distinct(),
       dir, n, fpp)
 
-  /** The ONE copy of the index-directory writer (grams parquet + Bloom
-    * bytes + policy meta) shared by [[writeContamIndex]] (corpus build)
-    * and [[mergeContamIndexes]] (index-only union rewrite) — a layout
-    * tweak cannot land in one lifecycle and miss the other. The three
-    * files are mutually CONSISTENT only as a set (a new gram table
-    * under an old sketch silently drops the new grams at the prefilter
-    * before exact verify ever sees them), so they materialize into a
-    * [[graft.util.StageSwap]] stage directory and swap in WHOLE — one
-    * atomic visibility point; a kill mid-write leaves the old index
-    * readable and the stage to the next writer's sweep. */
+  /** The ONE copy of the index build (grams + Bloom bytes + policy meta)
+    * shared by [[writeContamIndex]] (corpus build) and
+    * [[mergeContamIndexes]] (index-only union rebuild). The three are
+    * CONSISTENT only as a set (a new gram table under an old sketch
+    * silently drops the new grams at the prefilter before exact verify
+    * ever sees them); the build stages them together and promotes the
+    * whole directory at once. */
   private def writeContamFrom(gramSet: DataFrame, dir: String, n: Int,
       fpp: Double): Unit = {
-    val spark = gramSet.sparkSession
-    import spark.implicits._
     val grams = gramSet
-      .localCheckpoint(true) // read twice: write + cardinality/sketch
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val stage = graft.util.StageSwap.stageFor(fs, target)
-    grams.write.mode("overwrite").parquet(s"$stage/grams")
+      .localCheckpoint(true) // read twice: cardinality/sketch + write
     val bloom = grams.stat.bloomFilter("gram",
       math.max(grams.count(), 1L), fpp)
-    val out = fs.create(new org.apache.hadoop.fs.Path(stage, "bloom.bin"),
-      true)
-    try bloom.writeTo(out) finally out.close()
-    Seq((n, fpp)).toDF("n", "fpp").write.mode("overwrite")
-      .parquet(s"$stage/meta")
-    graft.util.StageSwap.promote(fs, stage, target)
+    graft.util.PersistedIndex(grams.sparkSession, dir).build(grams,
+      meta = Seq("n" -> n, "fpp" -> fpp),
+      files = Map("bloom.bin" -> (out => bloom.writeTo(out))))
   }
 
   /** Admit new benchmark suites WITHOUT re-tokenizing any corpus: union
     * the stored distinct-gram sets of `dirs` into one fresh index at
-    * `outDir` — the INDEX-ONLY rewrite the d23 lifecycle was missing
+    * `outDir` — the INDEX-ONLY rebuild the d23 lifecycle was missing
     * (Bloom bits cannot absorb appends, so admitting a suite used to
     * mean probing a second directory alongside or re-shingling the
     * union of corpora; this rebuilds the sketch from the stored gram
@@ -363,14 +351,12 @@ object TextAnalysis {
       new org.apache.hadoop.fs.Path(d).toUri.normalize()
     require(!dirs.map(norm).contains(norm(outDir)),
       "merge writes a NEW index directory — outDir must not be an input")
-    val ns = dirs.map(dd =>
-      spark.read.parquet(s"$dd/meta").head().getAs[Int]("n")).distinct
+    val inputs = dirs.map(graft.util.PersistedIndex(spark, _))
+    val ns = inputs.map(_.meta.getAs[Int]("n")).distinct
     require(ns.sizeIs == 1,
       s"gram orders differ across inputs ($ns) — indexes shingled at " +
         "different n cannot merge")
-    writeContamFrom(
-      dirs.map(dd => spark.read.parquet(s"$dd/grams"))
-        .reduce(_ unionAll _).distinct(),
+    writeContamFrom(inputs.map(_.rows).reduce(_ unionAll _).distinct(),
       outDir, ns.head, fpp)
   }
 
@@ -386,18 +372,14 @@ object TextAnalysis {
   def contaminatedDocsAgainstIndex(train: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = train.sparkSession
-    val n = spark.read.parquet(s"$dir/meta").head().getAs[Int]("n")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/bloom.bin")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val bloom =
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    val bc = spark.sparkContext.broadcast(bloom)
+    val idx = graft.util.PersistedIndex(spark, dir)
+    val n = idx.meta.getAs[Int]("n")
+    val bc = spark.sparkContext.broadcast(
+      idx.file("bloom.bin")(org.apache.spark.util.sketch.BloomFilter.readFrom))
     contamProbe(
       train.select(col(idCol),
         explode(wordNGrams(tokens(col(textCol)), n)).as("gram")),
-      spark.read.parquet(s"$dir/grams"), bc, idCol)
+      idx.rows, bc, idCol)
   }
 
   /** PII patterns (emails, North-American phone numbers, IPv4 addresses) —
@@ -602,53 +584,35 @@ object TextAnalysis {
         array_join(transform(col("arr"), x => x.getField("line")), "\n")
           .as("clean"))
 
-  /** Persist a corpus's LINE-OCCURRENCE INDEX — (line, n_occ) parquet
-    * plus the threshold in a meta row — the stored side of daily-crawl
-    * boilerplate removal (the d17 build-once/probe-many lifecycle, line
-    * domain): yesterday's corpus line counts persist; today's increment
-    * probes and appends without the corpus ever re-exploding. The
-    * threshold lives IN the index (the band-index meta discipline) so a
-    * probe cannot silently apply a different cutoff than the build. */
+  /** Build a corpus's LINE-OCCURRENCE INDEX through
+    * [[graft.util.PersistedIndex]] — [[lineIndexRows]] plus the threshold
+    * in its meta row — the stored side of daily-crawl boilerplate removal
+    * (the build-once/probe-many lifecycle, line domain): yesterday's
+    * corpus line counts persist; today's increment probes and appends
+    * without the corpus ever re-exploding. The threshold lives IN the
+    * index (the band-index meta discipline) so a probe cannot silently
+    * apply a different cutoff than the build. */
   def writeLineIndex(docs: DataFrame, dir: String,
       maxOccurrences: Long = 1, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      textCol: String = "text"): Unit =
+    graft.util.PersistedIndex(docs.sparkSession, dir).build(
+      lineIndexRows(docs, idCol, textCol),
+      meta = Seq("max_occurrences" -> maxOccurrences))
+
+  /** One snapshot's rows of the line index — (line, n_occ). The index is
+    * partial counts (a build plus appended batches), summed per line at
+    * probe time; [[lineCounts]] is also its index-only compaction. */
+  def lineIndexRows(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
     explodeLines(docs, idCol, textCol)
       .groupBy(col("line")).agg(count(lit(1)).as("n_occ"))
-      .write.mode("overwrite").parquet(s"$dir/lines")
-    Seq(maxOccurrences).toDF("max_occurrences")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
 
-  /** Admit an increment: append its line counts as NEW rows — the index
-    * is append-only partial counts, summed per line at probe time (a
-    * map-side-combined aggregation over index rows, never the corpus);
-    * [[compactLineIndex]] folds the partials back to one row per line
-    * when probe-side summing cost builds. */
-  def appendLineIndex(docs: DataFrame, dir: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    explodeLines(docs, idCol, textCol)
-      .groupBy(col("line")).agg(count(lit(1)).as("n_occ"))
-      .write.mode("append").parquet(s"$dir/lines")
-
-  /** INDEX-ONLY compaction of the append-accumulated line index: sum
-    * the stored partial counts per line — one map-side-combined groupBy
-    * over the INDEX ROWS, never a corpus re-explode — staged and
-    * atomically swapped ([[graft.util.StageSwap]]); the
-    * [[graft.pipeline.Dedup.compactUrlIndex]] lifecycle in the line
-    * domain. Probe results unchanged by construction (the probe sums
-    * at read; spec-pinned). The threshold meta is untouched — it is
-    * not partial state. */
-  def compactLineIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    graft.util.StageSwap.rewrite(
-      readLineIndex(spark, dir)
-        .groupBy(col("line")).agg(sum(col("n_occ")).as("n_occ")),
-      s"$dir/lines")
-
-  def readLineIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = spark.read.parquet(s"$dir/lines")
+  /** Sum partial line counts to one row per line: the probe's read of
+    * the stored side, and (through [[graft.util.PersistedIndex.rewrite]])
+    * the index-only compaction — never a corpus re-explode, and probe
+    * results unchanged by construction. */
+  def lineCounts(rows: DataFrame): DataFrame =
+    rows.groupBy(col("line")).agg(sum(col("n_occ")).as("n_occ"))
 
   /** Line-dedup an increment against a persisted index: a line drops
     * when its stored count PLUS its increment count clears the index's
@@ -658,13 +622,11 @@ object TextAnalysis {
     * corpus never re-explodes. */
   def lineDedupAgainstIndex(newDocs: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = newDocs.sparkSession
-    val maxOcc = spark.read.parquet(s"$dir/meta").head()
-      .getAs[Long]("max_occurrences")
+    val idx = graft.util.PersistedIndex(newDocs.sparkSession, dir)
+    val maxOcc = idx.meta.getAs[Long]("max_occurrences")
     val lines = explodeLines(newDocs, idCol, textCol)
     val incr = lines.groupBy(col("line")).agg(count(lit(1)).as("n_new"))
-    val stored = readLineIndex(spark, dir)
-      .groupBy(col("line")).agg(sum(col("n_occ")).as("n_old"))
+    val stored = lineCounts(idx.rows).withColumnRenamed("n_occ", "n_old")
     val droplist = incr.join(stored, Seq("line"), "left_outer")
       .filter(col("n_new") + coalesce(col("n_old"), lit(0L)) > maxOcc)
       .select(col("line"), lit(true).as("_dup"))

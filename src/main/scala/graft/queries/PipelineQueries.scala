@@ -628,8 +628,8 @@ object PipelineQueries {
     * already-ingested corpus — and the corpus side runs the full
     * production shape: the band index is BUILT from the initial corpus
     * snapshot ([[Dedup.writeBandIndex]]), a later admitted batch is
-    * APPENDED ([[Dedup.appendBandIndex]], reusing the index's stored
-    * banding params), and the increment PROBES the stored table
+    * APPENDED as batch 1 ([[Dedup.appendBandIndex]], reusing the index's
+    * stored banding params), and the increment PROBES the stored table
     * ([[Dedup.probeBandIndex]], coverage-checked) — the corpus at large
     * never re-hashes, never re-bands. The recompute twin
     * ([[Dedup.minhashIncrementalWords]]) is spec-pinned identical
@@ -641,7 +641,7 @@ object PipelineQueries {
     val corpus = docs.filter($"doc_id" % 17 =!= 0)
     val dir = graft.util.Scratch.dir("graft_band_d15")
     Dedup.writeBandIndex(corpus.filter($"doc_id" % 3 =!= 1), dir)
-    Dedup.appendBandIndex(corpus.filter($"doc_id" % 3 === 1), dir)
+    Dedup.appendBandIndex(corpus.filter($"doc_id" % 3 === 1), dir, 1)
     Dedup.probeBandIndex(docs.filter($"doc_id" % 17 === 0), corpus, dir)
       .orderBy($"new_id", $"corpus_id")
   }
@@ -1097,7 +1097,7 @@ object PipelineQueries {
     val dir = graft.util.Scratch.dir("graft_pq_inc")
     val cb = Similarity.pqTrain(seed, m = 16, ksub = 64, iters = 4)
     Similarity.writePqIndex(spark, cb, Similarity.pqEncode(seed, cb), dir)
-    Similarity.appendPqIndex(spark, dir, batch)
+    Similarity.appendPqIndex(spark, dir, 1, batch)
     val (cb2, codes2) = Similarity.readPqIndex(spark, dir)
     val ann = Similarity.pqTopK(emb.filter($"vec_id" < 8), codes2, emb,
       cb2, k = 5, rerankFactor = 8)
@@ -1107,8 +1107,9 @@ object PipelineQueries {
       .select($"n_queries", $"n_results", $"n_codes", $"recall_ok")
   }
 
-  /** s11 — ANN index DELETE maintenance ([[Similarity.removeFromPqIndex]],
-    * the s10 lifecycle's other half): build the persisted PQ index on the
+  /** s11 — ANN index DELETE maintenance ([[Similarity.withoutIds]] through
+    * a [[graft.util.PersistedIndex]] rewrite, the s10 lifecycle's other
+    * half): build the persisted PQ index on the
     * FULL corpus, delete the vec_id%7==3 slice by posting rewrite (no
     * retraining — codebook untouched), probe the re-read index against
     * the REMAINING corpus. Contract form as s10: recall floor 0.5
@@ -1125,7 +1126,8 @@ object PipelineQueries {
     val dir = graft.util.Scratch.dir("graft_pq_del")
     val cb = Similarity.pqTrain(emb, m = 16, ksub = 64, iters = 4)
     Similarity.writePqIndex(spark, cb, Similarity.pqEncode(emb, cb), dir)
-    Similarity.removeFromPqIndex(spark, dir, victims)
+    graft.util.PersistedIndex(spark, dir)
+      .rewrite(Similarity.withoutIds(victims))
     val (cb2, codes2) = Similarity.readPqIndex(spark, dir)
     val q = remaining.filter($"vec_id" < 8)
     val ann = Similarity.pqTopK(q, codes2, remaining, cb2,
@@ -2362,7 +2364,7 @@ object PipelineQueries {
   }
 
   /** d22 — URL dedup against a PERSISTED canonical-URL keeper index
-    * ([[graft.pipeline.Dedup.writeUrlIndex]] /
+    * ([[graft.pipeline.Dedup.urlIndexRows]] /
     * [[urlDedupAgainstIndex]] — d21's build-once/probe-many lifecycle
     * in d20's URL domain, the daily-crawl shape): the d20 alias corpus
     * splits into a stored side (doc_id % 17 ≠ 0, keeper minima written
@@ -2377,8 +2379,8 @@ object PipelineQueries {
     val blocklist = Seq("site3.com", "site5.com").toDF("domain")
     val corpus = urlCorpus(Tables.documents(spark, d))
     val dir = graft.util.Scratch.dir("graft_url_idx")
-    graft.pipeline.Dedup.writeUrlIndex(
-      corpus.filter($"doc_id" % 17 =!= 0), blocklist, dir)
+    graft.util.PersistedIndex(spark, dir).build(graft.pipeline.Dedup
+      .urlIndexRows(corpus.filter($"doc_id" % 17 =!= 0), blocklist))
     graft.pipeline.Dedup.urlDedupAgainstIndex(
         corpus.filter($"doc_id" % 17 === 0), blocklist, dir)
       .groupBy($"decision")
@@ -2388,7 +2390,8 @@ object PipelineQueries {
   }
 
   /** d24 — INDEX-ONLY compaction in the sweep
-    * ([[graft.pipeline.Dedup.compactUrlIndex]]): the d22 stored corpus
+    * ([[graft.pipeline.Dedup.urlKeepers]] as a
+    * [[graft.util.PersistedIndex]] rewrite): the d22 stored corpus
     * arrives as a build plus two APPENDS (the daily-crawl
     * accumulation — partial minima pile up per URL), compaction folds
     * them back to one row per URL over index rows alone, and the probe
@@ -2402,13 +2405,13 @@ object PipelineQueries {
     val corpus = urlCorpus(Tables.documents(spark, d))
     val stored = corpus.filter($"doc_id" % 17 =!= 0)
     val dir = graft.util.Scratch.dir("graft_url_idx_c")
-    graft.pipeline.Dedup.writeUrlIndex(
-      stored.filter($"doc_id" % 3 === 0), blocklist, dir)
-    graft.pipeline.Dedup.appendUrlIndex(
-      stored.filter($"doc_id" % 3 === 1), blocklist, dir)
-    graft.pipeline.Dedup.appendUrlIndex(
-      stored.filter($"doc_id" % 3 === 2), blocklist, dir)
-    graft.pipeline.Dedup.compactUrlIndex(spark, dir)
+    val idx = graft.util.PersistedIndex(spark, dir)
+    def rows(r: Int) = graft.pipeline.Dedup
+      .urlIndexRows(stored.filter($"doc_id" % 3 === r), blocklist)
+    idx.build(rows(0))
+    idx.append(1, rows(1))
+    idx.append(2, rows(2))
+    idx.rewrite(graft.pipeline.Dedup.urlKeepers)
     graft.pipeline.Dedup.urlDedupAgainstIndex(
         corpus.filter($"doc_id" % 17 === 0), blocklist, dir)
       .groupBy($"decision")

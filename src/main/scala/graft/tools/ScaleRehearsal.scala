@@ -365,8 +365,9 @@ object ScaleRehearsal {
     Seq(1, 4, k).distinct.foreach { mult =>
       val corpus = urls(200000L * mult, 0L)
       val dir = graft.util.Scratch.dir("rehearsal_urlidx")
+      val idx = graft.util.PersistedIndex(spark, dir)
       val t0 = System.nanoTime()
-      graft.pipeline.Dedup.writeUrlIndex(corpus, block, dir)
+      idx.build(graft.pipeline.Dedup.urlIndexRows(corpus, block))
       val tw = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val kept = graft.pipeline.Dedup
@@ -380,12 +381,12 @@ object ScaleRehearsal {
       // its cost must track the INDEX (distinct URLs, bounded at 97·5003
       // here), not the corpus build, and the probe must not move
       (1 to 3).foreach { a =>
-        graft.pipeline.Dedup.appendUrlIndex(
+        idx.append(a, graft.pipeline.Dedup.urlIndexRows(
           urls(20000L, 200000000L + a * 1000000L, pageOff = 10000L),
-          block, dir)
+          block))
       }
       val t2 = System.nanoTime()
-      graft.pipeline.Dedup.compactUrlIndex(spark, dir)
+      idx.rewrite(graft.pipeline.Dedup.urlKeepers)
       val tc = (System.nanoTime() - t2) / 1e9
       val kept2 = graft.pipeline.Dedup
         .urlDedupAgainstIndex(incr, block, dir)

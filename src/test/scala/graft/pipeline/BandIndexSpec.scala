@@ -39,7 +39,7 @@ class BandIndexSpec extends SparkSpec {
     Dedup.writeBandIndex(corpus, dir)
     // admit the batch: appendBandIndex reuses the index's STORED banding
     // parameters, so a caller cannot corrupt the table with a mismatch
-    Dedup.appendBandIndex(batch, dir)
+    Dedup.appendBandIndex(batch, dir, 1)
     val pairs = Dedup.probeBandIndex(inc, corpus.union(batch), dir)
       .as[(Long, Long, Double)].collect().toSeq
     assert(pairs.map(p => (p._1, p._2)) == Seq((20L, 10L)),
@@ -74,7 +74,7 @@ class BandIndexSpec extends SparkSpec {
     // admit a batch through a DIFFERENT spelling of the same physical
     // dir (trailing slash): the qualified-path normalization must land
     // the invalidation on the vouched entry
-    Dedup.appendBandIndex(batch, dir + "/")
+    Dedup.appendBandIndex(batch, dir + "/", 1)
     // the same (corpus, dir) probe that was vouched a moment ago must
     // now RE-CHECK and fail loud — a stale vouch would silently miss
     // the appended batch's near-dups

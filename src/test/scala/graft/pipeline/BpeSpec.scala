@@ -85,6 +85,38 @@ class BpeSpec extends SparkSpec {
       "native merge pass diverged from the HOF fold")
   }
 
+  test("native merge-pass kernel skips leading-zero keys like the fold " +
+    "and re-reads a reused non-unsafe map") {
+    // "02:abc" is no key the probe side can build: it must neither merge
+    // nor shadow the canonical "2:abc" that follows it
+    val zeroed = map_from_arrays(array(lit("02:abc"), lit("2:abc")),
+      array(lit("WRONG"), lit("abc")))
+    val lone = map_from_arrays(array(lit("02:abc")), array(lit("WRONG")))
+    val df = Seq(Seq("ab", "c"), Seq("x", "ab", "c")).toDF("syms")
+    Seq(zeroed, lone).foreach { m =>
+      val both = df.select(
+        graft.functions.BpeMergePass.of($"syms", m).as("fused"),
+        Bpe.applyMergeMapFold($"syms", m).as("composable"))
+      assert(both.filter(!($"fused" <=> $"composable")).isEmpty,
+        "native merge pass diverged from the HOF fold on a leading zero")
+    }
+    // a caller that reuses one non-unsafe MapData instance across rows
+    // must get the merges of its CURRENT contents
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData,
+      GenericArrayData}
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    val vals = new GenericArrayData(Array[Any](fromString("ab")))
+    val m = new ArrayBasedMapData(
+      new GenericArrayData(Array[Any](fromString("1:ab"))), vals)
+    val syms = new GenericArrayData(Array[Any](fromString("a"),
+      fromString("b")))
+    def merged(): String = graft.functions.BpeMergePass.compute(syms, m)
+      .getUTF8String(0).toString
+    assert(merged() == "ab")
+    vals.update(0, fromString("AB"))
+    assert(merged() == "AB", "served a stale index for a reused map")
+  }
+
   test("merged token chains: (a,b)->ab then (ab,c)->abc") {
     val df = Seq(Seq("a", "b", "c", "a", "b")).toDF("syms")
     val once = df.select(

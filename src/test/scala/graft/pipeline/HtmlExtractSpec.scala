@@ -184,7 +184,8 @@ class HtmlExtractSpec extends SparkSpec {
 
     // append admits the first increment; a second increment now sees
     // stored counts covering corpus + increment 1
-    TextAnalysis.appendLineIndex(incr, dir)
+    graft.util.PersistedIndex(spark, dir)
+      .append(1, TextAnalysis.lineIndexRows(incr))
     val incr2 = Seq((20L, "new text\nbrand new")).toDF("doc_id", "text")
     val via2 = collect(TextAnalysis.lineDedupAgainstIndex(incr2, dir))
     val re2 = collect(

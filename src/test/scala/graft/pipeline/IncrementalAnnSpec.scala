@@ -19,7 +19,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val dir = tmp("graft_inc_pq")
     val cb = Similarity.pqTrain(seed, m = 8, ksub = 16, iters = 3)
     Similarity.writePqIndex(spark, cb, Similarity.pqEncode(seed, cb), dir)
-    Similarity.appendPqIndex(spark, dir, batch)
+    Similarity.appendPqIndex(spark, dir, 1, batch)
     val (cb2, codes2) = Similarity.readPqIndex(spark, dir)
     // the codebook round-trips parquet bit-exactly
     assert(cb2.length == cb.length)
@@ -59,7 +59,8 @@ class IncrementalAnnSpec extends SparkSpec {
     val dir = tmp("graft_del_pq")
     val cb = Similarity.pqTrain(emb, m = 8, ksub = 16, iters = 3)
     Similarity.writePqIndex(spark, cb, Similarity.pqEncode(emb, cb), dir)
-    Similarity.removeFromPqIndex(spark, dir, victims)
+    graft.util.PersistedIndex(spark, dir)
+      .rewrite(Similarity.withoutIds(victims))
     val (cb2, codes2) = Similarity.readPqIndex(spark, dir)
     // exactly the victims are gone; survivors' codes untouched
     val left = codes2.select($"id").as[Long].collect().toSet
@@ -86,7 +87,8 @@ class IncrementalAnnSpec extends SparkSpec {
     val dir2 = tmp("graft_del_ivf")
     val (cent, assign) = Similarity.buildIvfIndex(emb, nCells = 8, iters = 3)
     Similarity.writeIvfIndex(cent, assign, dir2)
-    Similarity.removeFromIvfIndex(spark, dir2, victims)
+    graft.util.PersistedIndex(spark, dir2)
+      .rewrite(Similarity.withoutIds(victims))
     val (cent2, assign2) = Similarity.readIvfIndex(spark, dir2)
     assert(cent2.count() == cent.count())
     assert(assign2.select($"id").as[Long].collect().toSet == want)
@@ -100,7 +102,7 @@ class IncrementalAnnSpec extends SparkSpec {
     val dir = tmp("graft_inc_ivf")
     val (cent, assign) = Similarity.buildIvfIndex(seed, nCells = 8, iters = 3)
     Similarity.writeIvfIndex(cent, assign, dir)
-    Similarity.appendIvfIndex(spark, dir, batch)
+    Similarity.appendIvfIndex(spark, dir, 1, batch)
     val (cent2, assign2) = Similarity.readIvfIndex(spark, dir)
     // quantizer untouched; postings = old postings + one row per batch vec
     assert(cent2.count() == cent.count())

@@ -229,18 +229,19 @@ class Packing16Spec extends SparkSpec {
       .map(i => (i, s"https://site${i % 3}.com/p/${i % 5}"))
       .toDF("doc_id", "url")
     val dir = graft.util.Scratch.dir("graft_compact_url")
-    Dedup.writeUrlIndex(urlDocs(1L to 20L), blk, dir)
-    Dedup.appendUrlIndex(urlDocs(21L to 40L), blk, dir)
-    Dedup.appendUrlIndex(urlDocs(41L to 60L), blk, dir)
+    val urlIdx = graft.util.PersistedIndex(spark, dir)
+    urlIdx.build(Dedup.urlIndexRows(urlDocs(1L to 20L), blk))
+    urlIdx.append(1, Dedup.urlIndexRows(urlDocs(21L to 40L), blk))
+    urlIdx.append(2, Dedup.urlIndexRows(urlDocs(41L to 60L), blk))
     val probe = urlDocs(61L to 70L)
     val before = Dedup.urlDedupAgainstIndex(probe, blk, dir)
       .as[(Long, String, String)].collect().toSet
-    val rowsBefore = Dedup.readUrlIndex(spark, dir).count()
-    Dedup.compactUrlIndex(spark, dir)
+    val rowsBefore = urlIdx.rows.count()
+    urlIdx.rewrite(Dedup.urlKeepers)
     val after = Dedup.urlDedupAgainstIndex(probe, blk, dir)
       .as[(Long, String, String)].collect().toSet
     assert(after == before, "url probe changed across compaction")
-    val idx = Dedup.readUrlIndex(spark, dir)
+    val idx = urlIdx.rows
     assert(idx.count() < rowsBefore, "compaction did not shrink the index")
     assert(idx.groupBy($"canonical_url").count()
       .filter($"count" > 1).isEmpty, "compaction left partial minima")
@@ -250,15 +251,16 @@ class Packing16Spec extends SparkSpec {
       .toDF("doc_id", "text")
     val ldir = graft.util.Scratch.dir("graft_compact_line")
     TextAnalysis.writeLineIndex(lineDocs(1L to 10L), ldir)
-    TextAnalysis.appendLineIndex(lineDocs(11L to 20L), ldir)
+    val lineIdx = graft.util.PersistedIndex(spark, ldir)
+    lineIdx.append(1, TextAnalysis.lineIndexRows(lineDocs(11L to 20L)))
     val lprobe = lineDocs(21L to 25L)
     val lbefore = TextAnalysis.lineDedupAgainstIndex(lprobe, ldir)
       .as[(Long, Long, Long, String)].collect().toSet
-    TextAnalysis.compactLineIndex(spark, ldir)
+    lineIdx.rewrite(TextAnalysis.lineCounts)
     val lafter = TextAnalysis.lineDedupAgainstIndex(lprobe, ldir)
       .as[(Long, Long, Long, String)].collect().toSet
     assert(lafter == lbefore, "line probe changed across compaction")
-    assert(TextAnalysis.readLineIndex(spark, ldir)
+    assert(lineIdx.rows
       .groupBy($"line").count().filter($"count" > 1).isEmpty)
 
     // contam: merged index == probing both inputs and unioning hits ==

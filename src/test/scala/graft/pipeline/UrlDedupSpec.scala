@@ -82,7 +82,8 @@ class UrlDedupSpec extends SparkSpec {
     val stored = docs.filter($"doc_id" % 17 =!= 0)
     val incr = docs.filter($"doc_id" % 17 === 0)
     val dir = java.nio.file.Files.createTempDirectory("url_idx").toString
-    Dedup.writeUrlIndex(stored, block, dir)
+    graft.util.PersistedIndex(spark, dir)
+      .build(Dedup.urlIndexRows(stored, block))
     val viaIndex = Dedup.urlDedupAgainstIndex(incr, block, dir)
       .select($"doc_id", $"decision").as[(Long, String)].collect().toMap
     val recompute = Dedup.urlDedupDecisions(docs, block)
@@ -92,8 +93,8 @@ class UrlDedupSpec extends SparkSpec {
     // an increment id SMALLER than every stored id for its URL takes
     // the keeper slot exactly as a recompute would
     val d2 = java.nio.file.Files.createTempDirectory("url_idx2").toString
-    Dedup.writeUrlIndex(
-      Seq((10L, "https://ok.com/x")).toDF("doc_id", "url"), block, d2)
+    graft.util.PersistedIndex(spark, d2).build(Dedup.urlIndexRows(
+      Seq((10L, "https://ok.com/x")).toDF("doc_id", "url"), block))
     val g2 = Dedup.urlDedupAgainstIndex(
         Seq((3L, "https://ok.com/x"), (12L, "https://ok.com/x"))
           .toDF("doc_id", "url"), block, d2)
@@ -105,10 +106,11 @@ class UrlDedupSpec extends SparkSpec {
     "next probe") {
     val block = Seq("nope.com").toDF("domain")
     val dir = java.nio.file.Files.createTempDirectory("url_idx3").toString
-    Dedup.writeUrlIndex(
-      Seq((1L, "https://a.com/x")).toDF("doc_id", "url"), block, dir)
-    Dedup.appendUrlIndex(
-      Seq((2L, "https://b.com/y")).toDF("doc_id", "url"), block, dir)
+    val idx = graft.util.PersistedIndex(spark, dir)
+    idx.build(Dedup.urlIndexRows(
+      Seq((1L, "https://a.com/x")).toDF("doc_id", "url"), block))
+    idx.append(1, Dedup.urlIndexRows(
+      Seq((2L, "https://b.com/y")).toDF("doc_id", "url"), block))
     val got = Dedup.urlDedupAgainstIndex(
         Seq((5L, "https://b.com/y"), (6L, "https://c.com/z"))
           .toDF("doc_id", "url"), block, dir)
