@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -262,14 +265,11 @@ object Bench {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** Time each gate's `.count()` at `sfDir`, in name order. Returns the
-    * seconds per gate and the names of the gates that threw: a failing
-    * gate's time is no measurement, so it is reported on stderr and in the
-    * failed list (Bench then exits nonzero), never passed off as a fast
-    * run. */
-  def timeGates(spark: org.apache.spark.sql.SparkSession,
-      gates: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)],
+  /** Seconds of each gate's `.count()` at `sfDir`, in name order, and the
+    * gates that threw: their time is no measurement, so they are named on
+    * stderr and in the failed list (Bench then exits nonzero). */
+  def timeGates(spark: SparkSession,
+      gates: Seq[(String, (SparkSession, String) => DataFrame)],
       sfDir: String): (Seq[(String, Double)], Seq[String]) = {
     val failed = Seq.newBuilder[String]
     // deterministic name order: Map iteration order shifts whenever a query

@@ -130,13 +130,9 @@ object Dedup {
           .withColumn("_blocked", lit(true)), Bpe.DictBroadcastLimit),
         Seq("domain"), "left_outer")
 
-  /** One snapshot's rows of the CANONICAL-URL KEEPER INDEX — (canonical_url,
-    * keep_id): post-blocklist canonical URLs with their minimal doc id.
-    * Built and appended through [[graft.util.PersistedIndex]] (the d22
-    * daily-crawl shape: yesterday's canonical URLs persist, today's
-    * increment probes and appends without the stored corpus ever
-    * re-canonicalizing). The index is partial minima, re-minimized per URL
-    * at probe time; [[urlKeepers]] is also its index-only compaction. The
+  /** One snapshot's rows of the [[graft.util.PersistedIndex]] CANONICAL-URL
+    * KEEPER INDEX (d22): post-blocklist canonical URLs with their minimal
+    * doc id — partial minima, re-minimized per URL at probe time. The
     * blocklist applies at BUILD for stored docs (a blocked doc must never
     * become a stored keeper) and at probe for increment docs; callers must
     * probe with the same list they built with. */
@@ -148,9 +144,8 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"))
 
   /** Fold keeper rows to one minimal id per URL: the probe's read of the
-    * stored side, and (through [[graft.util.PersistedIndex.rewrite]]) the
-    * index-only compaction — index-sized, never a corpus scan, and probe
-    * results unchanged by construction. */
+    * stored side, and the index-only compaction as a rewrite (probe
+    * results unchanged by construction). */
   def urlKeepers(rows: DataFrame): DataFrame =
     rows.groupBy(col("canonical_url")).agg(min(col("keep_id")).as("keep_id"))
 
@@ -957,17 +952,11 @@ object Dedup {
   }
 
   /** Build the corpus's MinHash BAND INDEX — (band, bucket, id), one row
-    * per (doc, band), through [[graft.util.PersistedIndex]]: the stored
-    * side of the daily-increment dedup that [[minhashIncrementalWords]]'s
-    * scaladoc promises ("in production the corpus bands are a precomputed
-    * stored table"). Build once per corpus snapshot; every increment then
-    * joins its own bands against the STORED index ([[probeBandIndex]])
-    * without re-hashing the corpus, and admitted batches are published
-    * with [[appendBandIndex]]. The banding parameters ARE part of the
-    * index: appends and probes with different w/numHashes/rowsPerBand
-    * would join a different banding scheme against these rows and
-    * silently match nothing, so they live in the index's meta row and
-    * every later operation reuses them. */
+    * per (doc, band), a [[graft.util.PersistedIndex]]: the stored corpus
+    * side of [[minhashIncrementalWords]], probed by [[probeBandIndex]]
+    * without re-hashing the corpus. The banding parameters live in the
+    * meta row: appends and probes with different w/numHashes/rowsPerBand
+    * would join a different banding scheme and silently match nothing. */
   def writeBandIndex(docs: DataFrame, dir: String, w: Int = 5,
       numHashes: Int = 128, rowsPerBand: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
@@ -988,12 +977,10 @@ object Dedup {
       m.getAs[Int]("rows_per_band"))
   }
 
-  /** Admit a batch to a persisted band index as batch `batchId` (a
-    * published id is a no-op): its bands use the INDEX'S OWN stored
-    * parameters — the caller cannot corrupt the table with a mismatched
-    * banding scheme. The same batch must also be unioned into the corpus
-    * frame later probes pass (see [[minhashAgainstIndex]]'s sync
-    * contract). */
+  /** Admit a batch to a persisted band index as batch `batchId`, banded
+    * with the INDEX'S OWN stored parameters. The same batch must also be
+    * unioned into the corpus frame later probes pass
+    * ([[requireCoverage]]). */
   def appendBandIndex(docs: DataFrame, dir: String, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val idx = graft.util.PersistedIndex(docs.sparkSession, dir)
@@ -1083,7 +1070,7 @@ object Dedup {
         requireCoverage(stored, corpus, idCol)
       }
     minhashAgainstIndex(newDocs, corpus, stored, w, nh, rpb, threshold,
-      idCol, textCol, checkCoverage = false)
+      idCol, textCol)
   }
 
   /** SYNC CONTRACT of the stored-bands probe: `corpus` must cover every
@@ -1112,17 +1099,12 @@ object Dedup {
     * large never re-hashes, never re-bands). Same banding kernel
     * ([[bandBuckets]] via [[wordBandRows]]), same exact-Jaccard verify —
     * the result is identical to the recompute path by construction
-    * (spec-pinned). */
-  def minhashAgainstIndex(newDocs: DataFrame, corpus: DataFrame,
-      storedBands: DataFrame, w: Int = 5, numHashes: Int = 128,
-      rowsPerBand: Int = 2, threshold: Double = 0.8,
-      idCol: String = "doc_id", textCol: String = "text",
-      checkCoverage: Boolean = true): DataFrame = {
-    // checkCoverage (default ON) enforces [[requireCoverage]]'s sync
-    // contract. Prefer [[probeBandIndex]], whose parameters cannot drift
-    // from the build's.
+    * (spec-pinned). [[probeBandIndex]] supplies the build's parameters
+    * and checks [[requireCoverage]]'s sync contract. */
+  private def minhashAgainstIndex(newDocs: DataFrame, corpus: DataFrame,
+      storedBands: DataFrame, w: Int, numHashes: Int, rowsPerBand: Int,
+      threshold: Double, idCol: String, textCol: String): DataFrame = {
     require(numHashes % rowsPerBand == 0, "bands must tile the signature")
-    if (checkCoverage) requireCoverage(storedBands, corpus, idCol)
     val ng = spread(newDocs.filter(length(col(textCol)) >= 2 * w - 1))
       .select(col(idCol).as("id"),
         TextAnalysis.wordNGrams(TextAnalysis.tokens(col(textCol)), w)

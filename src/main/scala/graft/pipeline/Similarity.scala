@@ -268,13 +268,11 @@ object Similarity {
       .select(col("id"), col("cell"))
   }
 
-  /** Append a new-vector batch to a PERSISTED IVF index WITHOUT
-    * retraining (the FAISS `add`-after-`train` maintenance op), as batch
-    * `batchId` (a published id is a no-op): assign the batch against the
-    * stored quantizer and publish its posting rows. The quantizer is
-    * untouched, so existing probes see the same cells and the
-    * daily-crawl increment costs one assignment pass over the batch —
-    * never a rebuild of the corpus index. */
+  /** Append a new-vector batch to a PERSISTED IVF index as batch
+    * `batchId`, WITHOUT retraining (the FAISS `add`-after-`train`
+    * maintenance op): its postings are assigned against the stored
+    * quantizer, which stays untouched — one assignment pass over the
+    * batch, never a rebuild of the corpus index. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       batchId: Long, batch: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
@@ -283,10 +281,9 @@ object Similarity {
       assignToCells(batch, idx.side("centroids"), idCol, vecCol))
   }
 
-  /** Append a batch to a PERSISTED PQ index WITHOUT retraining, as batch
-    * `batchId` (a published id is a no-op): encode with the stored
-    * codebook and publish the code rows. Because encoding is a pure
-    * per-row function of (vector, codebook), the appended index is
+  /** Append a batch to a PERSISTED PQ index as batch `batchId`, WITHOUT
+    * retraining: encode with the stored codebook. Because encoding is a
+    * pure per-row function of (vector, codebook), the appended index is
     * BIT-IDENTICAL to re-encoding the union corpus against the same
     * codebook — the probe-equality contract the spec pins. */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -295,14 +292,11 @@ object Similarity {
     graft.util.PersistedIndex(spark, dir).append(batchId,
       pqEncode(batch, readPqIndex(spark, dir)._1, idCol, vecCol))
 
-  /** DELETE ids from a persisted PQ code table or IVF posting table
-    * without retraining — the other half of index maintenance
-    * (takedowns, retention expiry, dedup verdicts arriving after
-    * indexing): pass it to [[graft.util.PersistedIndex.rewrite]]. One
-    * anti-join rewrites the row table; codebook, quantizer and every
-    * other row are untouched, so the remaining PQ index is BIT-IDENTICAL
-    * to encoding the remaining corpus against the same codebook (the s10
-    * probe-equality argument, mirrored). */
+  /** DELETE ids from a persisted PQ or IVF index without retraining
+    * (takedowns, retention expiry), as a [[graft.util.PersistedIndex]]
+    * rewrite: codebook, quantizer and every other row are untouched, so
+    * the remaining PQ index is BIT-IDENTICAL to encoding the remaining
+    * corpus against the same codebook. */
   def withoutIds(removeIds: DataFrame,
       idCol: String = "vec_id"): DataFrame => DataFrame =
     _.join(removeIds.select(col(idCol).cast("long").as("id")),
@@ -571,11 +565,10 @@ object Similarity {
       .select(col("qid"), col("rank"), col("nid"), col("cos"))
   }
 
-  /** Persist a PQ index through [[graft.util.PersistedIndex]]: the code
-    * table (m ints per corpus vector — the 32× compressed probe scan) is
-    * its row table, the codebook (one row, KBs — broadcastable forever) a
-    * side table. Build once, probe from any session: the
-    * [[buildIvfIndex]] lifecycle, for PQ. */
+  /** Persist a PQ index, a [[graft.util.PersistedIndex]]: the code table
+    * (m ints per corpus vector — the 32× compressed probe scan) is its
+    * rows, the codebook (one row, KBs — broadcastable forever) a side
+    * table. */
   def writePqIndex(spark: org.apache.spark.sql.SparkSession,
       codebook: Array[Array[Array[Double]]], codes: DataFrame,
       dir: String): Unit = {

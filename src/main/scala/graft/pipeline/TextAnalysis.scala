@@ -288,18 +288,14 @@ object TextAnalysis {
       .join(benchGrams, Seq("gram"), "left_semi")
       .select(col(idCol)).distinct()
 
-  /** Build a benchmark suite's DECONTAMINATION INDEX through
-    * [[graft.util.PersistedIndex]] — the exact distinct n-gram set (its
-    * row table: the verify side) plus its Bloom sketch bytes (`bloom.bin`,
-    * [[org.apache.spark.util.sketch.BloomFilter.writeTo]]: the broadcast
-    * prefilter side) and the policy meta (n, fpp) — the
-    * build-once/probe-many lifecycle in the decontamination domain: an
-    * eval suite's gram set is built ONCE per benchmark release and every
-    * later training batch probes it without the benchmark corpus ever
-    * re-tokenizing. Bloom bits cannot absorb appends (unlike the
-    * count/min-partial indexes) — admitting a new suite means a second
-    * index directory probed alongside, or the INDEX-ONLY union rebuild
-    * ([[mergeContamIndexes]] — no corpus ever re-tokenizes). */
+  /** Build a benchmark suite's DECONTAMINATION INDEX, a
+    * [[graft.util.PersistedIndex]] (d23): the exact distinct n-gram set
+    * (its rows: the verify side), its Bloom sketch bytes (`bloom.bin`: the
+    * broadcast prefilter side) and the policy meta (n, fpp). Training
+    * batches probe it without the benchmark ever re-tokenizing. Bloom
+    * bits cannot absorb appends — admitting a new suite means a second
+    * index probed alongside, or the INDEX-ONLY union rebuild
+    * ([[mergeContamIndexes]]). */
   def writeContamIndex(benchmark: DataFrame, dir: String, n: Int,
       textCol: String = "text", fpp: Double = 0.01): Unit =
     writeContamFrom(
@@ -308,13 +304,10 @@ object TextAnalysis {
         .distinct(),
       dir, n, fpp)
 
-  /** The ONE copy of the index build (grams + Bloom bytes + policy meta)
-    * shared by [[writeContamIndex]] (corpus build) and
-    * [[mergeContamIndexes]] (index-only union rebuild). The three are
-    * CONSISTENT only as a set (a new gram table under an old sketch
-    * silently drops the new grams at the prefilter before exact verify
-    * ever sees them); the build stages them together and promotes the
-    * whole directory at once. */
+  /** The ONE copy of the index build shared by [[writeContamIndex]] and
+    * [[mergeContamIndexes]]. Grams, sketch and meta are CONSISTENT only as
+    * a set (a new gram table under an old sketch drops the new grams at
+    * the prefilter), which one build publishes at once. */
   private def writeContamFrom(gramSet: DataFrame, dir: String, n: Int,
       fpp: Double): Unit = {
     val grams = gramSet
@@ -584,14 +577,11 @@ object TextAnalysis {
         array_join(transform(col("arr"), x => x.getField("line")), "\n")
           .as("clean"))
 
-  /** Build a corpus's LINE-OCCURRENCE INDEX through
-    * [[graft.util.PersistedIndex]] — [[lineIndexRows]] plus the threshold
-    * in its meta row — the stored side of daily-crawl boilerplate removal
-    * (the build-once/probe-many lifecycle, line domain): yesterday's
-    * corpus line counts persist; today's increment probes and appends
-    * without the corpus ever re-exploding. The threshold lives IN the
-    * index (the band-index meta discipline) so a probe cannot silently
-    * apply a different cutoff than the build. */
+  /** Build a corpus's LINE-OCCURRENCE INDEX, a
+    * [[graft.util.PersistedIndex]] of [[lineIndexRows]] (d21): the stored
+    * side of daily-crawl boilerplate removal, probed and appended without
+    * the corpus ever re-exploding. The threshold lives IN the meta row so
+    * a probe cannot silently apply a different cutoff than the build. */
   def writeLineIndex(docs: DataFrame, dir: String,
       maxOccurrences: Long = 1, idCol: String = "doc_id",
       textCol: String = "text"): Unit =
@@ -599,18 +589,16 @@ object TextAnalysis {
       lineIndexRows(docs, idCol, textCol),
       meta = Seq("max_occurrences" -> maxOccurrences))
 
-  /** One snapshot's rows of the line index — (line, n_occ). The index is
-    * partial counts (a build plus appended batches), summed per line at
-    * probe time; [[lineCounts]] is also its index-only compaction. */
+  /** One snapshot's rows of the line index — (line, n_occ): partial
+    * counts, summed per line at probe time. */
   def lineIndexRows(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     explodeLines(docs, idCol, textCol)
       .groupBy(col("line")).agg(count(lit(1)).as("n_occ"))
 
   /** Sum partial line counts to one row per line: the probe's read of
-    * the stored side, and (through [[graft.util.PersistedIndex.rewrite]])
-    * the index-only compaction — never a corpus re-explode, and probe
-    * results unchanged by construction. */
+    * the stored side, and the index-only compaction as a rewrite (probe
+    * results unchanged by construction). */
   def lineCounts(rows: DataFrame): DataFrame =
     rows.groupBy(col("line")).agg(sum(col("n_occ")).as("n_occ"))
 

@@ -1109,8 +1109,8 @@ object PipelineQueries {
 
   /** s11 — ANN index DELETE maintenance ([[Similarity.withoutIds]] through
     * a [[graft.util.PersistedIndex]] rewrite, the s10 lifecycle's other
-    * half): build the persisted PQ index on the
-    * FULL corpus, delete the vec_id%7==3 slice by posting rewrite (no
+    * half): build the persisted PQ index on the FULL corpus, delete the
+    * vec_id%7==3 slice by posting rewrite (no
     * retraining — codebook untouched), probe the re-read index against
     * the REMAINING corpus. Contract form as s10: recall floor 0.5
     * (measured 0.971 at the oracle SF via the harness of tools.ProbeS10,
@@ -2925,7 +2925,7 @@ object PipelineQueries {
   }
 
   /** d17 — incremental near-dup against a PERSISTED band index
-    * ([[Dedup.writeBandIndex]]/[[Dedup.minhashAgainstIndex]] — the
+    * ([[Dedup.writeBandIndex]]/[[Dedup.probeBandIndex]] — the
     * stored-corpus-bands production shape d15's scaladoc promises): the
     * corpus bands are written once, the increment probes the re-read
     * table, grams re-derive for candidate corpus docs only. Identical

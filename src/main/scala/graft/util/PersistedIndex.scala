@@ -1,10 +1,11 @@
 package graft.util
 
 import java.io.{InputStream, OutputStream}
+import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
 
 /** One persisted index directory and the one way it is written. The six
   * pipeline index families (URL keepers, MinHash bands, line counts,
@@ -33,7 +34,6 @@ import org.apache.spark.sql.types._
   *
   * SINGLE WRITER per directory, the [[StageSwap]] contract. */
 final case class PersistedIndex(spark: SparkSession, dir: String) {
-  import PersistedIndex._
 
   private val root = new Path(dir)
   private val table = new Path(root, "rows")
@@ -41,7 +41,7 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Replace the index with `rows` as its first generation, the `meta`
-    * row (name → Int, Long or Double), side tables and side files. */
+    * row (one column per name), side tables and side files. */
   def build(rows: DataFrame, meta: Seq[(String, Any)] = Nil,
       sides: Map[String, DataFrame] = Map.empty,
       files: Map[String, OutputStream => Unit] = Map.empty): Unit =
@@ -52,10 +52,10 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
       sides: Map[String, DataFrame],
       files: Map[String, OutputStream => Unit]): Path = {
     val stage = StageSwap.stageFor(fs, root)
-    rows.write.parquet(new Path(stage, s"rows/${generation()}").toString)
+    rows.write.parquet(generationIn(new Path(stage, "rows")))
     if (meta.nonEmpty)
-      spark.createDataFrame(java.util.List.of(Row.fromSeq(meta.map(_._2))),
-        StructType(meta.map { case (k, v) => StructField(k, typeOf(v)) }))
+      spark.range(0, 1, 1, 1)
+        .select(meta.map { case (k, v) => lit(v).as(k) }: _*)
         .write.parquet(new Path(stage, "meta").toString)
     sides.foreach { case (name, df) =>
       df.write.parquet(new Path(stage, name).toString)
@@ -69,11 +69,12 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
 
   /** Publish `rows` as batch `batchId`, unless that batch is already
     * published (then `rows` is not evaluated). */
-  def append(batchId: Long, rows: => DataFrame): Unit =
-    if (!published(batchId)) publish(batchId, stageBatch(rows))
-
-  private[graft] def published(batchId: Long): Boolean =
-    fs.exists(new Path(table, s"b-$batchId"))
+  def append(batchId: Long, rows: => DataFrame): Unit = {
+    val batch = new Path(table, s"b-$batchId")
+    if (!fs.exists(batch))
+      require(fs.rename(stageBatch(rows), batch),
+        s"could not publish batch $batchId into $table")
+  }
 
   /** Write one batch into a fresh stage beside the row table. */
   private[graft] def stageBatch(rows: DataFrame): Path = {
@@ -82,17 +83,13 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
     stage
   }
 
-  private def publish(batchId: Long, stage: Path): Unit =
-    require(fs.rename(stage, new Path(table, s"b-$batchId")),
-      s"could not publish batch $batchId into $table")
-
   /** Replace the published rows with `f(rows)` as a new generation. The
     * new rows are written in full before the swap, so `f` may read the
     * files it replaces. */
   def rewrite(f: DataFrame => DataFrame): Unit = {
     val folded = entries.map(_.getPath.getName).filter(_.startsWith("b-"))
     val stage = StageSwap.stageFor(fs, table)
-    f(rows).write.parquet(new Path(stage, generation()).toString)
+    f(rows).write.parquet(generationIn(stage))
     folded.foreach(b => fs.create(new Path(stage, b), false).close())
     StageSwap.promote(fs, stage, table)
   }
@@ -107,6 +104,9 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
 
   private def entries: Seq[FileStatus] = fs.listStatus(table).toSeq
 
+  private def generationIn(parent: Path): String =
+    new Path(parent, s"g-${UUID.randomUUID()}").toString
+
   def meta: Row = side("meta").head()
 
   def side(name: String): DataFrame =
@@ -115,17 +115,5 @@ final case class PersistedIndex(spark: SparkSession, dir: String) {
   def file[T](name: String)(read: InputStream => T): T = {
     val in = fs.open(new Path(root, name))
     try read(in) finally in.close()
-  }
-}
-
-object PersistedIndex {
-  private def generation(): String = s"g-${java.util.UUID.randomUUID()}"
-
-  private def typeOf(v: Any): DataType = v match {
-    case _: Int => IntegerType
-    case _: Long => LongType
-    case _: Double => DoubleType
-    case other => throw new IllegalArgumentException(
-      s"unsupported meta value $other")
   }
 }

@@ -14,9 +14,6 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 class PersistedIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
-
   private def exists(p: Path): Boolean =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
 
@@ -47,7 +44,7 @@ class PersistedIndexSpec extends SparkSpec {
 
   test("(a) a batch staged but never published is invisible to probes, " +
     "and the next write sweeps it") {
-    val dir = tmp("pidx_stage")
+    val dir = Scratch.dir("pidx_stage")
     TextAnalysis.writeLineIndex(corpus, dir, maxOccurrences = 2)
     val idx = PersistedIndex(spark, dir)
     // the writer dies between staging batch 1 and publishing it
@@ -61,7 +58,7 @@ class PersistedIndexSpec extends SparkSpec {
 
   test("(b) appending the same batch id twice counts it once: line " +
     "counts, PQ/IVF and band probes equal a recompute") {
-    val dir = tmp("pidx_retry_line")
+    val dir = Scratch.dir("pidx_retry_line")
     TextAnalysis.writeLineIndex(corpus, dir, maxOccurrences = 2)
     val idx = PersistedIndex(spark, dir)
     idx.append(1, TextAnalysis.lineIndexRows(batch1))
@@ -81,7 +78,7 @@ class PersistedIndexSpec extends SparkSpec {
     def ranked(df: DataFrame) = df.as[(Long, Long, Long, Double)]
       .collect().toSeq.sortBy(r => (r._1, r._2))
 
-    val pqDir = tmp("pidx_retry_pq")
+    val pqDir = Scratch.dir("pidx_retry_pq")
     val cb = Similarity.pqTrain(seed, m = 8, ksub = 16, iters = 3)
     Similarity.writePqIndex(spark, cb, Similarity.pqEncode(seed, cb), pqDir)
     Similarity.appendPqIndex(spark, pqDir, 1, batch)
@@ -92,7 +89,7 @@ class PersistedIndexSpec extends SparkSpec {
     assert(ranked(Similarity.pqTopK(q, codes, emb, cb, 5, 4)) ==
       ranked(Similarity.pqTopK(q, scratch, emb, cb, 5, 4)))
 
-    val ivfDir = tmp("pidx_retry_ivf")
+    val ivfDir = Scratch.dir("pidx_retry_ivf")
     val (cent, assign) = Similarity.buildIvfIndex(seed, nCells = 8, iters = 3)
     Similarity.writeIvfIndex(cent, assign, ivfDir)
     Similarity.appendIvfIndex(spark, ivfDir, 1, batch)
@@ -109,7 +106,7 @@ class PersistedIndexSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val bandBatch = Seq((10L, doc("fresh"))).toDF("doc_id", "text")
     val inc = Seq((20L, doc("fresh") + " tail")).toDF("doc_id", "text")
-    val bandDir = tmp("pidx_retry_band")
+    val bandDir = Scratch.dir("pidx_retry_band")
     Dedup.writeBandIndex(bandCorpus, bandDir)
     Dedup.appendBandIndex(bandBatch, bandDir, 1)
     Dedup.appendBandIndex(bandBatch, bandDir, 1)
@@ -125,7 +122,7 @@ class PersistedIndexSpec extends SparkSpec {
 
   test("(c) a build killed before its promote leaves the previous index " +
     "readable, and the next write sweeps its stage") {
-    val dir = tmp("pidx_build")
+    val dir = Scratch.dir("pidx_build")
     TextAnalysis.writeLineIndex(corpus, dir, maxOccurrences = 2)
     // a rebuild at another threshold dies before it is promoted
     val stage = PersistedIndex(spark, dir).stageBuild(
@@ -141,7 +138,7 @@ class PersistedIndexSpec extends SparkSpec {
 
   test("a swap killed between its two renames is restored by the next " +
     "write") {
-    val dir = tmp("pidx_aside")
+    val dir = Scratch.dir("pidx_aside")
     TextAnalysis.writeLineIndex(corpus, dir, maxOccurrences = 2)
     val table = new Path(dir, "rows")
     val aside = new Path(dir, ".swap-rows-old-killed")
