@@ -307,4 +307,3 @@ object Bench {
     (results, failed.result())
   }
 }
-

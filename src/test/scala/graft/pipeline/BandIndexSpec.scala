@@ -72,8 +72,8 @@ class BandIndexSpec extends SparkSpec {
     // first probe passes its coverage check and vouches (session memo)
     Dedup.probeBandIndex(inc, corpus, dir).collect()
     // admit a batch through a DIFFERENT spelling of the same physical
-    // dir (trailing slash): the qualified-path normalization must land
-    // the invalidation on the vouched entry
+    // dir (trailing slash): the vouch is keyed by the index's published
+    // state, which the append changes whatever the spelling
     Dedup.appendBandIndex(batch, dir + "/", 1)
     // the same (corpus, dir) probe that was vouched a moment ago must
     // now RE-CHECK and fail loud — a stale vouch would silently miss
